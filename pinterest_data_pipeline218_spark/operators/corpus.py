@@ -1494,7 +1494,8 @@ def quality_report_vs(docs: DataFrame, bench: DataFrame) -> DataFrame:
     oracle parity): same columns, same gate expressions, contamination
     screened with contamination_report_vs. This is also the batch
     ground-truth the incremental streaming report
-    (streaming/pipeline.attach_quality_report_stream) is tested against.
+    (streaming/pipeline.quality_state_batch driven by attach_state_stream)
+    is tested against.
     ``docs`` expects (doc_id, text, lang, source)."""
     from .text_analysis import contamination_report_vs, repetition_flags
 

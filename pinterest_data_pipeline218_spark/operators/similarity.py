@@ -2225,10 +2225,10 @@ def sim_ivf_increment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gated batch rendering of IVF index maintenance: freeze a coarse
     quantizer on the BASE 80% of the embeddings (vec_id % 5 != 0), assign
     the ARRIVING 20% to its cells, and report per-cell staleness. The
-    streaming twin (`streaming/pipeline.py attach_ivf_assign_stream` +
-    `incremental_ivf_staleness`) accumulates the same assignments
-    per-micro-batch with overwrite-partition idempotence; equality is
-    pytest-proved (`test_incremental_ivf_staleness_equals_batch`)."""
+    streaming twin (`streaming/pipeline.py ivf_assign_state_batch` driven
+    by `attach_state_stream`, + `incremental_ivf_staleness`) accumulates
+    the same assignments per-micro-batch with overwrite-partition
+    idempotence; equality is pytest-proved (`test_incremental_ivf_staleness_equals_batch`)."""
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", as_double_array("embedding").alias("v")
     )

@@ -24,9 +24,10 @@ Deliberate fixes over the reference (SURVEY.md §7):
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StringType, StructField, StructType
 
@@ -161,7 +162,6 @@ def write_append_stream(
     out_path: str,
     checkpoint_root: str,
     query_name: str,
-    fmt: str = "parquet",
     available_now: bool = False,
 ) -> StreamingQuery:
     """Append-mode sink with a per-query checkpoint dir (S5/ST3, fixing the
@@ -175,7 +175,7 @@ def write_append_stream(
     re-reading the source or running a 24/7 cluster."""
     checkpoint = os.path.join(checkpoint_root, query_name)
     writer = (
-        df.writeStream.format(fmt)
+        df.writeStream.format("parquet")
         .outputMode("append")
         .option("path", out_path)
         .option("checkpointLocation", checkpoint)
@@ -348,9 +348,79 @@ def sliding_counts(
     )
 
 
-# --------------------------------------------------------- incremental report
+# ----------------------------------------------------- incremental dashboards
+# Each dashboard is a ``*_state_batch(batch_df, ..., state_dir, batch_id)``
+# that lands one micro-batch's mergeable state under ``{state_dir}/<part>``
+# and an ``incremental_*(spark, ..., state_dir)`` that merges every landed
+# batch and runs the batch query's finisher over it; attach_state_stream
+# drives a state batch from a stream.
+
+
+def _state_path(state_dir: str, part: str, batch_id: int | None = None) -> str:
+    root = f"{state_dir}/{part}"
+    return root if batch_id is None else f"{root}/batch_id={batch_id}"
+
+
+def _has_state(state_dir: str, part: str, batch_id: int | None = None) -> bool:
+    return os.path.isdir(_state_path(state_dir, part, batch_id))
+
+
+def _write_state(df: DataFrame, state_dir: str, part: str, batch_id: int) -> None:
+    """Land one micro-batch's ``part`` state at
+    ``{state_dir}/{part}/batch_id={batch_id}`` with mode("overwrite").
+
+    This is the idempotence contract of every incremental dashboard:
+    foreachBatch is at-least-once, so a batch replayed after a crash
+    rewrites its own partition instead of appending a duplicate, and the
+    readers merge across partitions unchanged (partition discovery
+    surfaces batch_id as a column they ignore). A quiet trigger still
+    lands its (empty) partition."""
+    df.write.mode("overwrite").parquet(_state_path(state_dir, part, batch_id))
+
+
+def _read_state(
+    spark: SparkSession,
+    state_dir: str,
+    part: str,
+    schema: str | StructType,
+    batch_id: int | None = None,
+) -> DataFrame:
+    """Every landed batch of ``part`` (or only ``batch_id``'s). Before the
+    first batch lands, an empty frame of ``schema`` (the state's layout),
+    so a dashboard queried early runs its finisher over empty state
+    instead of raising AnalysisException, and a carry chain's first batch
+    merges into an empty carry."""
+    if _has_state(state_dir, part, batch_id):
+        return spark.read.parquet(_state_path(state_dir, part, batch_id))
+    return spark.createDataFrame([], schema)
+
+
+def _total(col: str) -> Column:
+    """SUM of a counter column that is 0, not NULL, over no rows (a quiet
+    micro-batch lands NULL sums)."""
+    return F.coalesce(F.sum(col), F.lit(0))
+
+
+def attach_state_stream(
+    stream: DataFrame,
+    checkpoint: str,
+    state_batch: Callable[[DataFrame, int], None],
+) -> StreamingQuery:
+    """Run a dashboard's state batch over every micro-batch of ``stream``
+    (foreachBatch), with the query's progress in ``checkpoint``.
+    ``state_batch(batch_df, batch_id)`` is a lambda over a
+    ``*_state_batch``; read the dashboard at any time with its
+    ``incremental_*``. Structured Streaming's batch ids are sequential per
+    query, which is the carry chains' prev = batch_id - 1 contract."""
+    return (
+        stream.writeStream.foreachBatch(state_batch)
+        .option("checkpointLocation", checkpoint)
+        .start()
+    )
+
+
 def quality_state_batch(
-    batch_df: DataFrame, bench: DataFrame, state_dir: str, batch_id: int = -1
+    batch_df: DataFrame, bench: DataFrame, state_dir: str, batch_id: int
 ) -> None:
     """One micro-batch's contribution to the incremental curation
     dashboard. Everything the report needs decomposes into either
@@ -362,14 +432,7 @@ def quality_state_batch(
     (kind, value) rows under ``{state_dir}/keys/batch_id=<bid>``. The
     per-batch work is the SAME gate expressions the batch report runs; no
     state lives in executor memory, so the dashboard survives restarts with
-    the stream's checkpoint.
-
-    IDEMPOTENT on batch id: foreachBatch is at-least-once, so a batch
-    replayed after a crash must not double-count. Each batch's rows land in
-    their own ``batch_id=<bid>`` partition directory written with
-    ``overwrite`` — a replay rewrites the same partition instead of
-    appending a duplicate, and assembly sums across partitions unchanged
-    (partition discovery surfaces batch_id as a column the report ignores)."""
+    the stream's checkpoint."""
     from ..functions import text as T
     from ..operators.corpus import QUALITY_THRESHOLD
     from ..operators.text_analysis import (
@@ -395,9 +458,7 @@ def quality_state_batch(
         .crossJoin(F.broadcast(n_rep))
         .crossJoin(F.broadcast(n_cont))
     )
-    counters.write.mode("overwrite").parquet(
-        f"{state_dir}/counters/batch_id={batch_id}"
-    )
+    _write_state(counters, state_dir, "counters", batch_id)
     keys = (
         docs.select(F.lit("digest").alias("kind"), F.md5("text").alias("value"))
         .unionAll(docs.select(F.lit("lang").alias("kind"), F.col("lang").alias("value")))
@@ -406,22 +467,7 @@ def quality_state_batch(
         )
         .distinct()
     )
-    keys.write.mode("overwrite").parquet(f"{state_dir}/keys/batch_id={batch_id}")
-
-
-def attach_quality_report_stream(
-    stream_docs: DataFrame, bench: DataFrame, state_dir: str, checkpoint: str
-):
-    """Run the incremental dashboard over a document stream (foreachBatch —
-    the multi-aggregate report cannot be one streaming query, which is
-    exactly why it decomposes into mergeable state)."""
-    return (
-        stream_docs.writeStream.foreachBatch(
-            lambda batch_df, bid: quality_state_batch(batch_df, bench, state_dir, bid)
-        )
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
+    _write_state(keys, state_dir, "keys", batch_id)
 
 
 def incremental_quality_report(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -429,28 +475,16 @@ def incremental_quality_report(spark: SparkSession, state_dir: str) -> DataFrame
     rows, count distinct keys per kind. Emits EXACTLY the
     corpus.quality_report_vs schema, and (pytest-proved) exactly its
     values over the union of all processed batches — including cross-batch
-    exact duplicates, which per-batch reports cannot see. Queried before
-    the first batch has landed (state dirs absent), returns the all-zero
-    report instead of throwing; zero-doc division yields NULL bps."""
-    if not (
-        os.path.isdir(f"{state_dir}/counters") and os.path.isdir(f"{state_dir}/keys")
-    ):
-        return spark.sql(
-            "SELECT CAST(0 AS BIGINT) n_docs, CAST(0 AS BIGINT) n_tokens, "
-            "CAST(NULL AS BIGINT) quality_pass_bp, "
-            "CAST(NULL AS BIGINT) repetition_pass_bp, "
-            "CAST(NULL AS BIGINT) contaminated_bp, "
-            "CAST(0 AS BIGINT) n_exact_dup_docs, "
-            "CAST(0 AS BIGINT) n_langs, CAST(0 AS BIGINT) n_sources"
-        )
-    c = spark.read.parquet(f"{state_dir}/counters").agg(
-        F.sum("n_docs").alias("n_docs"),
-        F.sum("n_tokens").alias("n_tokens"),
-        F.sum("n_quality_pass").alias("n_quality_pass"),
-        F.sum("n_repetition_pass").alias("n_repetition_pass"),
-        F.sum("n_contaminated").alias("n_contaminated"),
+    exact duplicates, which per-batch reports cannot see. Before the first
+    batch, or after only empty ones, it is the all-zero report; zero-doc
+    division yields NULL bps."""
+    counters = (
+        "n_docs", "n_tokens", "n_quality_pass", "n_repetition_pass", "n_contaminated"
     )
-    keys = spark.read.parquet(f"{state_dir}/keys")
+    c = _read_state(
+        spark, state_dir, "counters", ", ".join(f"{n} bigint" for n in counters)
+    ).agg(*(_total(n).alias(n) for n in counters))
+    keys = _read_state(spark, state_dir, "keys", "kind string, value string")
 
     def n_distinct(kind: str, alias: str) -> DataFrame:
         return (
@@ -481,7 +515,7 @@ def incremental_quality_report(spark: SparkSession, state_dir: str) -> DataFrame
 
 # ------------------------------------------------- incremental retention
 def retention_state_batch(
-    batch_df: DataFrame, state_dir: str, batch_id: int = -1
+    batch_df: DataFrame, state_dir: str, batch_id: int
 ) -> None:
     """One micro-batch's contribution to the incremental retention
     triangle. The triangle decomposes into ONE piece of mergeable state:
@@ -489,31 +523,11 @@ def retention_state_batch(
     MIN week) and every offset count are functions of it, and set-union
     merges across batches (a user first seen in batch 0 and active again
     in batch 5 lands in the right offset cell at assembly, which no
-    per-batch triangle can do). Same idempotence contract as
-    quality_state_batch: rows land in a batch_id partition written with
-    overwrite, so an at-least-once replay rewrites instead of
-    double-appending. Expects (user_id, ts, ...)."""
+    per-batch triangle can do). Expects (user_id, ts, ...)."""
     acts = batch_df.select(
         "user_id", F.date_trunc("week", F.col("ts")).alias("w")
     ).distinct()
-    acts.write.mode("overwrite").parquet(
-        f"{state_dir}/activity/batch_id={batch_id}"
-    )
-
-
-def attach_retention_stream(
-    stream_ev: DataFrame, state_dir: str, checkpoint: str
-):
-    """Run the incremental retention state over an event stream
-    (foreachBatch — min-per-user plus a distinct-join-rollup cannot be one
-    streaming aggregate, which is exactly why it decomposes)."""
-    return (
-        stream_ev.writeStream.foreachBatch(
-            lambda batch_df, bid: retention_state_batch(batch_df, state_dir, bid)
-        )
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
+    _write_state(acts, state_dir, "activity", batch_id)
 
 
 def incremental_retention_triangle(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -524,159 +538,87 @@ def incremental_retention_triangle(spark: SparkSession, state_dir: str) -> DataF
     is pytest-proved (`test_incremental_retention_equals_batch`)."""
     from ..plans.events import retention_triangle_from_activity
 
-    if not os.path.isdir(f"{state_dir}/activity"):
-        # queried before the first batch has landed: the empty triangle,
-        # not AnalysisException (the incremental_quality_report contract)
-        return spark.sql(
-            "SELECT CAST(NULL AS DATE) cohort_week, CAST(NULL AS INT) "
-            "week_offset, CAST(0 AS BIGINT) n_users"
-        ).limit(0)
     act = (
-        spark.read.parquet(f"{state_dir}/activity")
+        _read_state(spark, state_dir, "activity", "user_id bigint, w timestamp")
         .select("user_id", "w")
         .distinct()
     )
     return retention_triangle_from_activity(act)
 
 
-def funnel_state_batch(
-    batch_df: DataFrame,
-    state_dir: str,
-    batch_id: int = -1,
-    steps: tuple[str, ...] = ("view", "click", "purchase"),
-) -> None:
+def funnel_state_batch(batch_df: DataFrame, state_dir: str, batch_id: int) -> None:
     """One micro-batch's contribution to the incremental ordered funnel
     (the streaming sibling of `plans.events.funnel_steps`, completing the
     retention/funnel pair). The mergeable state is the DISTINCT
     ``(user_id, event_type, ts)`` set restricted to the funnel's step
-    types — and it genuinely cannot be less than that: first-touch entry
-    times are NOT per-(user, step) minima (step k's entry is the min
-    step-k ts strictly after the step-(k-1) entry), and the step-1 entry
-    time only DECREASES as batches merge, so a step-k event that looks
+    types (``FUNNEL_DEFAULT_STEPS``) — and it genuinely cannot be less
+    than that: first-touch entry times are NOT per-(user, step) minima
+    (step k's entry is the min step-k ts strictly after the step-(k-1)
+    entry), and the step-1 entry time only DECREASES as batches merge,
+    so a step-k event that looks
     too early today may become the first touch once an earlier step-(k-1)
     event arrives; symmetrically, pruning step-k events below the current
     step-1 minimum is unsound because the final minimum is <= the current
     one. A per-(user, step) min — or any bounded truncation — therefore
     breaks cross-batch ordering; the distinct event-triple set (a small,
     step-filtered fraction of the stream) is the exact lower bound of
-    information the funnel needs. Set-union merges; same
-    ``batch_id=<bid>`` overwrite-partition idempotence contract as
-    quality_state_batch, so an at-least-once replay rewrites instead of
-    double-appending. Expects (user_id, event_type, ts, ...)."""
+    information the funnel needs. Set-union merges. Expects (user_id,
+    event_type, ts, ...)."""
+    from ..plans.events import FUNNEL_DEFAULT_STEPS
+
     evs = (
-        batch_df.filter(F.col("event_type").isin(*steps))
+        batch_df.filter(F.col("event_type").isin(*FUNNEL_DEFAULT_STEPS))
         .select("user_id", "event_type", "ts")
         .distinct()
     )
-    evs.write.mode("overwrite").parquet(
-        f"{state_dir}/funnel_events/batch_id={batch_id}"
-    )
+    _write_state(evs, state_dir, "funnel_events", batch_id)
 
 
-def attach_funnel_stream(
-    stream_ev: DataFrame,
-    state_dir: str,
-    checkpoint: str,
-    steps: tuple[str, ...] = ("view", "click", "purchase"),
-):
-    """Run the incremental funnel state over an event stream (foreachBatch
-    — the chained filtered-min joins cannot be one streaming aggregate,
-    which is exactly why the state/assembly decomposition exists)."""
-    return (
-        stream_ev.writeStream.foreachBatch(
-            lambda batch_df, bid: funnel_state_batch(
-                batch_df, state_dir, bid, steps
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
-
-
-def incremental_funnel(
-    spark: SparkSession,
-    state_dir: str,
-    steps: tuple[str, ...] = ("view", "click", "purchase"),
-) -> DataFrame:
+def incremental_funnel(spark: SparkSession, state_dir: str) -> DataFrame:
     """Assemble the funnel from accumulated step-event state: re-distinct
     the unioned triples (batch_id partition column dropped), then EXACTLY
     the batch combinator — equality with the batch funnel over the union
     of processed batches holds by construction and is pytest-proved
     (`test_incremental_funnel_equals_batch`), including the cross-batch
     reordering case where a user's click precedes their view until an
-    earlier view arrives in a later batch.
-
-    CONTRACT (the incremental_kmv pattern): ``steps`` must equal the
-    step list the state batches were filtered with — state filtered for
-    other step types simply lacks this assembly's events and every
-    count reads low."""
+    earlier view arrives in a later batch. Before the first batch it has
+    no rows; after only empty batches, zero-count steps."""
     from ..plans.events import funnel_steps
 
-    if not os.path.isdir(f"{state_dir}/funnel_events"):
-        # queried before the first batch has landed: the empty funnel,
-        # not AnalysisException (the incremental_quality_report contract)
-        return spark.sql(
-            "SELECT CAST(0 AS INT) step, CAST(NULL AS STRING) event_type, "
-            "CAST(0 AS BIGINT) n_users, CAST(0 AS BIGINT) conv_bp"
-        ).limit(0)
     evs = (
-        spark.read.parquet(f"{state_dir}/funnel_events")
+        _read_state(
+            spark, state_dir, "funnel_events",
+            "user_id bigint, event_type string, ts timestamp",
+        )
         .select("user_id", "event_type", "ts")
         .distinct()
     )
-    return funnel_steps(evs, steps)
+    funnel = funnel_steps(evs)
+    return funnel if _has_state(state_dir, "funnel_events") else funnel.limit(0)
 
 
 def kmv_state_batch(
-    batch_df: DataFrame,
-    state_dir: str,
-    batch_id: int = -1,
-    group_col: str = "event_type",
-    key_col: str = "user_id",
-    k: int | None = None,
+    batch_df: DataFrame, state_dir: str, batch_id: int, k: int | None = None
 ) -> None:
     """One micro-batch's contribution to incremental KMV distinct counts:
-    the batch's PARTIAL SKETCH — its distinct (group, hash) pairs
-    truncated to the k smallest per group, so unlike the funnel's
+    the batch's PARTIAL SKETCH — its distinct (event_type, user_id hash)
+    pairs truncated to the k smallest per group, so unlike the funnel's
     event-triple state this state is BOUNDED (k rows per group per
     batch) no matter how large the batch. Sound because min-k of a union
     equals min-k of the union of per-batch min-k sets, and below k total
     distinct hashes every batch's set survives truncation intact, so
-    exact mode still sees the true count. Same batch_id overwrite-
-    partition idempotence contract as the other dashboards."""
+    exact mode still sees the true count."""
     from ..plans.events import KMV_K, kmv_hashes
 
     k = k or KMV_K
-    d = kmv_hashes(batch_df, group_col, key_col)
+    d = kmv_hashes(batch_df, "event_type", "user_id")
     w = Window.partitionBy("g").orderBy("h")
     partial = (
         d.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= k)
         .select("g", "h")
     )
-    partial.write.mode("overwrite").parquet(
-        f"{state_dir}/kmv/batch_id={batch_id}"
-    )
-
-
-def attach_kmv_stream(
-    stream_ev: DataFrame,
-    state_dir: str,
-    checkpoint: str,
-    group_col: str = "event_type",
-    key_col: str = "user_id",
-):
-    """Run the incremental KMV state over an event stream (foreachBatch —
-    the min-k truncation is a per-batch rank, not a streaming aggregate)."""
-    return (
-        stream_ev.writeStream.foreachBatch(
-            lambda batch_df, bid: kmv_state_batch(
-                batch_df, state_dir, bid, group_col, key_col
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
+    _write_state(partial, state_dir, "kmv", batch_id)
 
 
 def incremental_kmv(
@@ -695,26 +637,17 @@ def incremental_kmv(
     candidate count instead of either valid estimate."""
     from ..plans.events import KMV_K, kmv_estimate_from_hashes
 
-    if not os.path.isdir(f"{state_dir}/kmv"):
-        return spark.sql(
-            "SELECT CAST(NULL AS STRING) g, CAST(0 AS BIGINT) kmv_users"
-        ).limit(0)
-    d = spark.read.parquet(f"{state_dir}/kmv").select("g", "h").distinct()
-    return kmv_estimate_from_hashes(d, k or KMV_K)
+    d = _read_state(spark, state_dir, "kmv", "g string, h bigint").select("g", "h")
+    return kmv_estimate_from_hashes(d.distinct(), k or KMV_K)
 
 
-def hist_state_batch(
-    batch_df: DataFrame, state_dir: str, batch_id: int = -1
-) -> None:
+def hist_state_batch(batch_df: DataFrame, state_dir: str, batch_id: int) -> None:
     """One micro-batch's histogram — the purely ADDITIVE sketch state
     (bin counts sum across batches), bounded by |types| x |bins| rows per
-    batch. Same batch_id overwrite-partition idempotence contract as the
-    other incremental dashboards."""
+    batch."""
     from ..plans.events import hist_bin_counts
 
-    hist_bin_counts(batch_df).write.mode("overwrite").parquet(
-        f"{state_dir}/hist/batch_id={batch_id}"
-    )
+    _write_state(hist_bin_counts(batch_df), state_dir, "hist", batch_id)
 
 
 def incremental_hist_quantiles(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -725,45 +658,28 @@ def incremental_hist_quantiles(spark: SparkSession, state_dir: str) -> DataFrame
     (`test_incremental_hist_quantiles_equals_batch`)."""
     from ..plans.events import hist_quantiles_from_counts
 
-    if not os.path.isdir(f"{state_dir}/hist"):
-        return spark.sql(
-            "SELECT CAST(NULL AS STRING) event_type, CAST(0 AS BIGINT) "
-            "p50_lo_cents, CAST(0 AS BIGINT) p95_lo_cents"
-        ).limit(0)
     merged = (
-        spark.read.parquet(f"{state_dir}/hist")
+        _read_state(spark, state_dir, "hist", "event_type string, bin bigint, c bigint")
         .groupBy("event_type", "bin")
         .agg(F.sum("c").alias("c"))
     )
     return hist_quantiles_from_counts(merged)
 
 
-def cm_state_batch(
-    batch_df: DataFrame,
-    state_dir: str,
-    batch_id: int = -1,
-    key_col: str = "user_id",
-) -> None:
+def cm_state_batch(batch_df: DataFrame, state_dir: str, batch_id: int) -> None:
     """One micro-batch's count-min contribution: the sketch's two
     ADDITIVE partials — the (j, c, n) counter cells (bounded at d*w rows
-    per batch) and the per-key counts the top-n answer needs anyway.
+    per batch) and the per-user_id counts the top-n answer needs anyway.
     Counter positions are deterministic functions of the key, so they
-    are never stored for the probe side. Same batch_id overwrite-
-    partition idempotence contract as the other dashboards."""
+    are never stored for the probe side."""
     from ..plans.events import cm_partials
 
-    counters, key_counts = cm_partials(batch_df, key_col)
-    counters.write.mode("overwrite").parquet(
-        f"{state_dir}/cm_counters/batch_id={batch_id}"
-    )
-    key_counts.write.mode("overwrite").parquet(
-        f"{state_dir}/cm_keys/batch_id={batch_id}"
-    )
+    counters, key_counts = cm_partials(batch_df, "user_id")
+    _write_state(counters, state_dir, "cm_counters", batch_id)
+    _write_state(key_counts, state_dir, "cm_keys", batch_id)
 
 
-def incremental_cm_top_users(
-    spark: SparkSession, state_dir: str, key_col: str = "user_id", top_n: int = 10
-) -> DataFrame:
+def incremental_cm_top_users(spark: SparkSession, state_dir: str) -> DataFrame:
     """Assemble heavy hitters from accumulated count-min partials: sum
     the counter cells and the per-key counts (both merges are plain
     addition), then EXACTLY the batch probe/rank finisher — stream ==
@@ -771,37 +687,26 @@ def incremental_cm_top_users(
     (`test_incremental_cm_equals_batch`)."""
     from ..plans.events import cm_finish
 
-    if not os.path.isdir(f"{state_dir}/cm_counters"):
-        return spark.sql(
-            f"SELECT CAST(NULL AS BIGINT) {key_col}, CAST(0 AS BIGINT) "
-            "est_count, CAST(0 AS BIGINT) exact_count, CAST(0 AS BIGINT) overshoot"
-        ).limit(0)
     counters = (
-        spark.read.parquet(f"{state_dir}/cm_counters")
+        _read_state(spark, state_dir, "cm_counters", "j int, c bigint, n bigint")
         .groupBy("j", "c")
         .agg(F.sum("n").alias("n"))
     )
     key_counts = (
-        spark.read.parquet(f"{state_dir}/cm_keys")
+        _read_state(spark, state_dir, "cm_keys", "key bigint, exact_count bigint")
         .groupBy("key")
         .agg(F.sum("exact_count").alias("exact_count"))
     )
-    return cm_finish(counters, key_counts, key_col, top_n=top_n)
+    return cm_finish(counters, key_counts, "user_id")
 
 
-def drift_state_batch(
-    batch_df: DataFrame, state_dir: str, batch_id: int = -1
-) -> None:
+def drift_state_batch(batch_df: DataFrame, state_dir: str, batch_id: int) -> None:
     """One micro-batch's drift-cell contribution — the purely ADDITIVE
     state (per-(type, bin) counts sum across batches), bounded at
-    |types| × DRIFT_N_BINS rows per batch. Same batch_id
-    overwrite-partition idempotence contract as the other incremental
-    dashboards (a replayed batch overwrites itself, never double-counts)."""
+    |types| × DRIFT_N_BINS rows per batch."""
     from ..operators.dataquality import drift_cells
 
-    drift_cells(batch_df, "n").write.mode("overwrite").parquet(
-        f"{state_dir}/drift/batch_id={batch_id}"
-    )
+    _write_state(drift_cells(batch_df, "n"), state_dir, "drift", batch_id)
 
 
 def incremental_events_drift(
@@ -819,16 +724,13 @@ def incremental_events_drift(
     from ..operators.dataquality import drift_cells, drift_report
 
     base_cells = drift_cells(baseline, "n_first")
-    if not os.path.isdir(f"{state_dir}/drift"):
-        cur = base_cells.select(
-            "event_type", "bin", F.lit(0).cast("bigint").alias("n_second")
-        ).limit(0)
-    else:
-        cur = (
-            spark.read.parquet(f"{state_dir}/drift")
-            .groupBy("event_type", "bin")
-            .agg(F.sum("n").alias("n_second"))
+    cur = (
+        _read_state(
+            spark, state_dir, "drift", "event_type string, bin bigint, n bigint"
         )
+        .groupBy("event_type", "bin")
+        .agg(F.sum("n").alias("n_second"))
+    )
     cells = (
         base_cells.join(cur, ["event_type", "bin"], "full_outer")
         .select(
@@ -841,38 +743,17 @@ def incremental_events_drift(
     return drift_report(cells)
 
 
-def attach_drift_stream(
-    stream_ev: DataFrame, state_dir: str, checkpoint: str
-):
-    """Wire the drift-cell accumulator onto an events stream via
-    foreachBatch (the sink-side assembly every incremental dashboard here
-    uses); read the monitor at any time with incremental_events_drift."""
-    return (
-        stream_ev.writeStream.foreachBatch(
-            lambda df, bid: drift_state_batch(df, state_dir, bid)
-        )
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
-
-
-def hll_state_batch(
-    batch_df: DataFrame, state_dir: str, batch_id: int = -1
-) -> None:
+def hll_state_batch(batch_df: DataFrame, state_dir: str, batch_id: int) -> None:
     """One micro-batch's daily HLL sketch contribution (VERDICT r11 #5 —
     the unbounded half of the materialized-sketch pattern): per
     (event_type, week, day) one bounded sketch blob for THIS batch's
-    rows, written under batch_id=N so a replayed batch overwrites itself
-    (the drift twin's overwrite-partition idempotence contract). State is
-    MERGEABLE rather than additive: read-side hll_union_agg is a lossless
-    register-wise max at equal lgConfigK, so partial sketches union to
-    exactly the single-pass sketch — stream == batch holds bit-identical,
-    not approximately."""
+    rows. State is MERGEABLE rather than additive: read-side
+    hll_union_agg is a lossless register-wise max at equal lgConfigK, so
+    partial sketches union to exactly the single-pass sketch — stream ==
+    batch holds bit-identical, not approximately."""
     from ..plans.events import hll_daily_sketches
 
-    hll_daily_sketches(batch_df).write.mode("overwrite").parquet(
-        f"{state_dir}/hll/batch_id={batch_id}"
-    )
+    _write_state(hll_daily_sketches(batch_df), state_dir, "hll", batch_id)
 
 
 def incremental_hll_weekly(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -884,59 +765,25 @@ def incremental_hll_weekly(spark: SparkSession, state_dir: str) -> DataFrame:
     pytest-proved (`test_incremental_hll_equals_batch`)."""
     from ..plans.events import hll_weekly_rollup
 
-    if not os.path.isdir(f"{state_dir}/hll"):
-        return spark.createDataFrame(
-            [], "event_type string, week bigint, est bigint, n_days bigint"
-        )
     daily = (
-        spark.read.parquet(f"{state_dir}/hll")
+        _read_state(
+            spark, state_dir, "hll",
+            "event_type string, week bigint, day bigint, sk binary",
+        )
         .groupBy("event_type", "week", "day")
         .agg(F.expr("hll_union_agg(sk)").alias("sk"))
     )
     return hll_weekly_rollup(daily).orderBy("event_type", "week")
 
 
-def attach_hll_stream(stream_ev: DataFrame, state_dir: str, checkpoint: str):
-    """Wire the daily-sketch accumulator onto an events stream via
-    foreachBatch; read the weekly rollup at any time with
-    incremental_hll_weekly."""
-    return (
-        stream_ev.writeStream.foreachBatch(
-            lambda df, bid: hll_state_batch(df, state_dir, bid)
-        )
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
-
-
-def gapfill_state_batch(
-    batch_df: DataFrame, state_dir: str, batch_id: int = -1
-) -> None:
+def gapfill_state_batch(batch_df: DataFrame, state_dir: str, batch_id: int) -> None:
     """One micro-batch's hourly aggregate for the incremental gap-fill
     dashboard — additive state (counts and cent sums add per (type,
     hour) cell), and COMPLETE state: the grid bounds are min/max of the
-    observed hours, so no separate bounds bookkeeping can drift. Same
-    batch_id overwrite-partition idempotence contract as the other
-    dashboards."""
+    observed hours, so no separate bounds bookkeeping can drift."""
     from ..plans.events import gapfill_hourly_agg
 
-    gapfill_hourly_agg(batch_df).write.mode("overwrite").parquet(
-        f"{state_dir}/gapfill/batch_id={batch_id}"
-    )
-
-
-def attach_gapfill_stream(
-    stream_ev: DataFrame, state_dir: str, checkpoint: str
-):
-    """Run the incremental gap-fill state over an event stream
-    (foreachBatch, the dashboard-family contract)."""
-    return (
-        stream_ev.writeStream.foreachBatch(
-            lambda batch_df, bid: gapfill_state_batch(batch_df, state_dir, bid)
-        )
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
+    _write_state(gapfill_hourly_agg(batch_df), state_dir, "gapfill", batch_id)
 
 
 def incremental_gapfill(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -949,25 +796,18 @@ def incremental_gapfill(spark: SparkSession, state_dir: str) -> DataFrame:
     (`test_incremental_gapfill_equals_batch`)."""
     from ..plans.events import gapfill_from_hourly
 
-    if not os.path.isdir(f"{state_dir}/gapfill"):
-        return spark.sql(
-            "SELECT CAST(NULL AS STRING) event_type, CAST(NULL AS TIMESTAMP) "
-            "hour_ts, CAST(0 AS BIGINT) n_events, CAST(0 AS BIGINT) v_cents_locf"
-        ).limit(0)
     merged = (
-        spark.read.parquet(f"{state_dir}/gapfill")
+        _read_state(
+            spark, state_dir, "gapfill",
+            "event_type string, h timestamp, n bigint, v_cents bigint",
+        )
         .groupBy("event_type", "h")
         .agg(F.sum("n").alias("n"), F.sum("v_cents").alias("v_cents"))
     )
     return gapfill_from_hourly(merged)
 
 
-def markov_state_batch(
-    batch_df: DataFrame,
-    state_dir: str,
-    batch_id: int = -1,
-    prev_batch_id: int | None = None,
-) -> None:
+def markov_state_batch(batch_df: DataFrame, state_dir: str, batch_id: int) -> None:
     """One micro-batch's Markov contribution — the fourth state SHAPE in
     the incremental family (beside additive matrices, min-k sets, and
     derived bounds): a per-user CARRY. Adjacent pairs inside the batch
@@ -981,73 +821,40 @@ def markov_state_batch(
     from carry_{b-1} and rewrites identical outputs (idempotence without
     read-modify-write races). Same ordering contract as sessionization:
     per-user event-time order across batches. An EMPTY batch copies the
-    carry forward so the chain never breaks."""
+    carry forward so the chain never breaks; the first batch chains from
+    an empty carry."""
     from ..plans.events import markov_pair_counts
 
-    prev = batch_id - 1 if prev_batch_id is None else prev_batch_id
-    within = markov_pair_counts(batch_df)
-
-    lasts = (
-        batch_df.groupBy("user_id")
-        .agg(F.max(F.struct("ts", "event_id", "event_type")).alias("m"))
-        .select("user_id", F.col("m.ts").alias("ts"),
-                F.col("m.event_id").alias("event_id"),
-                F.col("m.event_type").alias("event_type"))
+    event = F.struct("ts", "event_id", "event_type")
+    events = batch_df.select("user_id", "ts", "event_id", "event_type")
+    carry_prev = _read_state(
+        batch_df.sparkSession, state_dir, "markov_carry", events.schema, batch_id - 1
+    ).select(*events.columns)
+    firsts = batch_df.groupBy("user_id").agg(
+        F.min(event).event_type.alias("first_type")
     )
-    firsts = (
-        batch_df.groupBy("user_id")
-        .agg(F.min(F.struct("ts", "event_id", "event_type")).alias("m"))
-        .select("user_id", F.col("m.event_type").alias("first_type"))
+    boundary = (
+        carry_prev.join(firsts, "user_id")
+        .groupBy(
+            F.col("event_type").alias("from_type"),
+            F.col("first_type").alias("to_type"),
+        )
+        .agg(F.count(F.lit(1)).alias("n"))
     )
-
-    spark = batch_df.sparkSession
-    prev_path = f"{state_dir}/markov_carry/batch_id={prev}"
-    if os.path.isdir(prev_path):
-        carry_prev = spark.read.parquet(prev_path).select(
-            "user_id", "ts", "event_id", "event_type"
-        )
-        boundary = (
-            carry_prev.join(firsts, "user_id")
-            .groupBy(
-                F.col("event_type").alias("from_type"),
-                F.col("first_type").alias("to_type"),
-            )
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-        counts = within.unionAll(boundary).groupBy("from_type", "to_type").agg(
-            F.sum("n").alias("n")
-        )
-        carry = (
-            carry_prev.unionAll(lasts)
-            .groupBy("user_id")
-            .agg(F.max(F.struct("ts", "event_id", "event_type")).alias("m"))
-            .select("user_id", F.col("m.ts").alias("ts"),
-                    F.col("m.event_id").alias("event_id"),
-                    F.col("m.event_type").alias("event_type"))
-        )
-    else:
-        counts, carry = within, lasts
-    counts.write.mode("overwrite").parquet(
-        f"{state_dir}/markov_counts/batch_id={batch_id}"
+    counts = (
+        markov_pair_counts(batch_df)
+        .unionAll(boundary)
+        .groupBy("from_type", "to_type")
+        .agg(F.sum("n").alias("n"))
     )
-    carry.write.mode("overwrite").parquet(
-        f"{state_dir}/markov_carry/batch_id={batch_id}"
+    carry = (
+        carry_prev.unionAll(events)
+        .groupBy("user_id")
+        .agg(F.max(event).alias("m"))
+        .select("user_id", "m.*")
     )
-
-
-def attach_markov_stream(
-    stream_ev: DataFrame, state_dir: str, checkpoint: str
-):
-    """Run the incremental Markov state over an event stream (foreachBatch
-    — Structured Streaming's batch ids are sequential per query, which is
-    exactly the carry chain's prev = bid - 1 contract)."""
-    return (
-        stream_ev.writeStream.foreachBatch(
-            lambda batch_df, bid: markov_state_batch(batch_df, state_dir, bid)
-        )
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
+    _write_state(counts, state_dir, "markov_counts", batch_id)
+    _write_state(carry, state_dir, "markov_carry", batch_id)
 
 
 def incremental_markov(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -1059,51 +866,26 @@ def incremental_markov(spark: SparkSession, state_dir: str) -> DataFrame:
     (`test_incremental_markov_equals_batch`)."""
     from ..plans.events import markov_from_counts
 
-    if not os.path.isdir(f"{state_dir}/markov_counts"):
-        return spark.sql(
-            "SELECT CAST(NULL AS STRING) from_type, CAST(NULL AS STRING) "
-            "to_type, CAST(0 AS BIGINT) n, CAST(0 AS BIGINT) p_bp"
-        ).limit(0)
     merged = (
-        spark.read.parquet(f"{state_dir}/markov_counts")
+        _read_state(
+            spark, state_dir, "markov_counts",
+            "from_type string, to_type string, n bigint",
+        )
         .groupBy("from_type", "to_type")
         .agg(F.sum("n").alias("n"))
     )
     return markov_from_counts(merged)
 
 
-def rolling7d_state_batch(
-    batch_df: DataFrame, state_dir: str, batch_id: int = -1
-) -> None:
+def rolling7d_state_batch(batch_df: DataFrame, state_dir: str, batch_id: int) -> None:
     """One micro-batch's contribution to the incremental trailing-7-day
     distinct-actives metric: the DISTINCT (day, user_id) activity pairs —
     the same day-granularity reduction the batch query starts from, and
     the minimal sound state (a distinct count cannot be maintained from
     anything less than the distinct set; the reduction bounds state at
-    |days| × |users seen that day|, not raw events). Set-union merges;
-    same batch_id=<bid> overwrite-partition idempotence contract as the
-    retention/funnel states."""
-    du = (
-        batch_df.select(F.to_date("ts").alias("day"), "user_id").distinct()
-    )
-    du.write.mode("overwrite").parquet(
-        f"{state_dir}/rolling_activity/batch_id={batch_id}"
-    )
-
-
-def attach_rolling7d_stream(
-    stream_ev: DataFrame, state_dir: str, checkpoint: str
-):
-    """Run the rolling-actives state over an event stream (foreachBatch —
-    a sliding DISTINCT is not a maintainable streaming aggregate, which
-    is exactly why it decomposes into state + assembly)."""
-    return (
-        stream_ev.writeStream.foreachBatch(
-            lambda batch_df, bid: rolling7d_state_batch(batch_df, state_dir, bid)
-        )
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
+    |days| × |users seen that day|, not raw events). Set-union merges."""
+    du = batch_df.select(F.to_date("ts").alias("day"), "user_id").distinct()
+    _write_state(du, state_dir, "rolling_activity", batch_id)
 
 
 def incremental_rolling_7d(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -1114,21 +896,15 @@ def incremental_rolling_7d(spark: SparkSession, state_dir: str) -> DataFrame:
     construction (`test_incremental_rolling7d_equals_batch`)."""
     from ..plans.events import rolling_7d_from_activity
 
-    if not os.path.isdir(f"{state_dir}/rolling_activity"):
-        return spark.sql(
-            "SELECT CAST(NULL AS STRING) day, CAST(0 AS BIGINT) users_7d"
-        ).limit(0)
     du = (
-        spark.read.parquet(f"{state_dir}/rolling_activity")
+        _read_state(spark, state_dir, "rolling_activity", "day date, user_id bigint")
         .select("day", "user_id")
         .distinct()
     )
     return rolling_7d_from_activity(du)
 
 
-def journey_state_batch(
-    batch_df: DataFrame, state_dir: str, batch_id: int, prev_batch_id=None
-):
+def journey_state_batch(batch_df: DataFrame, state_dir: str, batch_id: int) -> None:
     """Append-only ordered-string carry — a new member of the incremental
     state taxonomy (beside additive counts, min-k, derived bounds, and the
     Markov carry pair): per user, the event-initial journey string so far.
@@ -1140,54 +916,33 @@ def journey_state_batch(
     contract: micro-batches arrive in event-time order per user (ingestion
     replay order) and batch ids are sequential (foreachBatch guarantee).
     Replay-idempotent: carry(b) is a pure function of carry(b-1) and batch
-    b, and per-batch dirs are overwritten in place.
+    b; the first batch merges into an empty carry.
 
     State size: one row per user, string bounded by that user's own
     history — identical to the batch collect_list bound; the merge is one
     full-outer equi-join keyed on user_id."""
     from ..plans.sequences import journey_strings
 
-    prev = batch_id - 1 if prev_batch_id is None else prev_batch_id
     base = batch_df.select(
         "user_id", "ts", "event_id", F.substring("event_type", 1, 1).alias("ch")
     )
     within = journey_strings(base)
-
-    spark = batch_df.sparkSession
-    prev_path = f"{state_dir}/journey_carry/batch_id={prev}"
-    if os.path.isdir(prev_path):
-        p = spark.read.parquet(prev_path).select(
-            "user_id",
-            F.col("journey").alias("p_journey"),
-            F.col("n_events").alias("p_n"),
-        )
-        carry = p.join(within, "user_id", "full_outer").select(
-            "user_id",
-            F.concat(
-                F.coalesce("p_journey", F.lit("")),
-                F.coalesce("journey", F.lit("")),
-            ).alias("journey"),
-            (
-                F.coalesce("p_n", F.lit(0)) + F.coalesce("n_events", F.lit(0))
-            ).alias("n_events"),
-        )
-    else:
-        carry = within
-    carry.write.mode("overwrite").parquet(
-        f"{state_dir}/journey_carry/batch_id={batch_id}"
+    p = _read_state(
+        batch_df.sparkSession, state_dir, "journey_carry", within.schema, batch_id - 1
+    ).select(
+        "user_id", F.col("journey").alias("p_journey"), F.col("n_events").alias("p_n")
     )
-
-
-def attach_journey_stream(stream_ev: DataFrame, state_dir: str, checkpoint: str):
-    """Run the journey carry over an event stream (foreachBatch — batch
-    ids are sequential per query, the prev = bid - 1 contract)."""
-    return (
-        stream_ev.writeStream.foreachBatch(
-            lambda batch_df, bid: journey_state_batch(batch_df, state_dir, bid)
-        )
-        .option("checkpointLocation", checkpoint)
-        .start()
+    carry = p.join(within, "user_id", "full_outer").select(
+        "user_id",
+        F.concat(
+            F.coalesce("p_journey", F.lit("")),
+            F.coalesce("journey", F.lit("")),
+        ).alias("journey"),
+        (
+            F.coalesce("p_n", F.lit(0)) + F.coalesce("n_events", F.lit(0))
+        ).alias("n_events"),
     )
+    _write_state(carry, state_dir, "journey_carry", batch_id)
 
 
 def incremental_journey(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -1197,20 +952,18 @@ def incremental_journey(spark: SparkSession, state_dir: str) -> DataFrame:
     (`test_incremental_journey_equals_batch`)."""
     from ..plans.sequences import journey_finisher
 
-    root = f"{state_dir}/journey_carry"
-    if not os.path.isdir(root):
-        return spark.sql(
-            "SELECT CAST(NULL AS BIGINT) user_id, CAST(0 AS BIGINT) n_events, "
-            "CAST(0 AS BIGINT) journey_len, CAST(NULL AS STRING) journey_md5, "
-            "CAST(0 AS BIGINT) n_quick_convert, CAST(0 AS INT) starts_signup, "
-            "CAST(0 AS INT) has_assisted_convert"
-        ).limit(0)
-    latest = max(
-        int(d.split("=", 1)[1])
-        for d in os.listdir(root)
-        if d.startswith("batch_id=")
+    latest = None
+    if _has_state(state_dir, "journey_carry"):
+        latest = max(
+            int(d.split("=", 1)[1])
+            for d in os.listdir(_state_path(state_dir, "journey_carry"))
+            if d.startswith("batch_id=")
+        )
+    carry = _read_state(
+        spark, state_dir, "journey_carry",
+        "user_id bigint, journey string, n_events bigint", latest,
     )
-    return journey_finisher(spark.read.parquet(f"{root}/batch_id={latest}"))
+    return journey_finisher(carry)
 
 
 # -------------------------------------------------- observed ETL metrics
@@ -1293,7 +1046,7 @@ def with_srm_metrics(
 
 # ----------------------------------------------- incremental data quality
 def dq_state_batch(
-    batch_orders: DataFrame, customer: DataFrame, state_dir: str, batch_id: int = -1
+    batch_orders: DataFrame, customer: DataFrame, state_dir: str, batch_id: int
 ) -> None:
     """One micro-batch's contribution to the continuous data-quality
     monitor (the streaming twin of operators/dataquality.py's suite).
@@ -1304,8 +1057,7 @@ def dq_state_batch(
     batch lands its per-key counts under ``keys/batch_id=<bid>`` and the
     assembly takes total-minus-distinct across ALL state — exactly the
     digest-set move the quality dashboard uses for cross-batch exact
-    dups. Idempotent on batch id (overwrite per partition — the
-    at-least-once foreachBatch discipline)."""
+    dups."""
     from ..operators.dataquality import ORDER_STATUSES
 
     o = batch_orders
@@ -1342,55 +1094,26 @@ def dq_state_batch(
         .cast("long")
         .alias("orderdate_in_range"),
     ).crossJoin(F.broadcast(orphans))
-    counters.write.mode("overwrite").parquet(
-        f"{state_dir}/counters/batch_id={batch_id}"
-    )
+    _write_state(counters, state_dir, "counters", batch_id)
     keys = o.groupBy("o_orderkey").agg(F.count(F.lit(1)).cast("long").alias("n"))
-    keys.write.mode("overwrite").parquet(f"{state_dir}/keys/batch_id={batch_id}")
-
-
-def attach_dq_stream(
-    stream_orders: DataFrame, customer: DataFrame, state_dir: str, checkpoint: str
-):
-    """Run the data-quality monitor over an orders stream (foreachBatch —
-    the multi-aggregate suite decomposes into mergeable state)."""
-    return (
-        stream_orders.writeStream.foreachBatch(
-            lambda batch_df, bid: dq_state_batch(batch_df, customer, state_dir, bid)
-        )
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
+    _write_state(keys, state_dir, "keys", batch_id)
 
 
 def incremental_dq(spark: SparkSession, state_dir: str) -> DataFrame:
     """Assemble the constraint suite from accumulated state — EXACTLY
     dq_orders_constraints' schema and (pytest-proved) its values over the
     union of all processed batches, including cross-batch duplicate keys
-    no per-batch check can see. Before the first batch: the all-pass
-    zero report."""
-    if not (
-        os.path.isdir(f"{state_dir}/counters") and os.path.isdir(f"{state_dir}/keys")
-    ):
-        names = [
-            "fk_custkey_customer", "not_null_custkey", "orderdate_in_range",
-            "positive_totalprice", "status_in_domain", "unique_orderkey",
-        ]
-        return spark.createDataFrame(
-            [(n, 0, True) for n in names],
-            "check_name string, n_violations long, pass boolean",
-        )
-    c = spark.read.parquet(f"{state_dir}/counters").agg(
-        F.sum("not_null_custkey").cast("long").alias("not_null_custkey"),
-        F.sum("positive_totalprice").cast("long").alias("positive_totalprice"),
-        F.sum("status_in_domain").cast("long").alias("status_in_domain"),
-        F.sum("orderdate_in_range").cast("long").alias("orderdate_in_range"),
-        F.sum("fk_custkey_customer").cast("long").alias("fk_custkey_customer"),
+    no per-batch check can see. Before the first batch, or after only
+    empty ones: the all-pass zero report."""
+    checks = (
+        "not_null_custkey", "positive_totalprice", "status_in_domain",
+        "orderdate_in_range", "fk_custkey_customer",
     )
-    k = spark.read.parquet(f"{state_dir}/keys").agg(
-        (F.sum("n") - F.countDistinct("o_orderkey"))
-        .cast("long")
-        .alias("unique_orderkey")
+    c = _read_state(
+        spark, state_dir, "counters", ", ".join(f"{n} bigint" for n in checks)
+    ).agg(*(_total(n).alias(n) for n in checks))
+    k = _read_state(spark, state_dir, "keys", "o_orderkey bigint, n bigint").agg(
+        (_total("n") - F.countDistinct("o_orderkey")).alias("unique_orderkey")
     )
     wide = c.crossJoin(F.broadcast(k))
     long = wide.selectExpr(
@@ -1517,21 +1240,15 @@ def purge_keys(spark: SparkSession, path: str, key_col: str, keys) -> int:
     return before - spark.read.parquet(path).count()
 
 
-def cascade_state_batch(
-    batch_docs: DataFrame, state_dir: str, batch_id: int = -1
-) -> None:
+def cascade_state_batch(batch_docs: DataFrame, state_dir: str, batch_id: int) -> None:
     """One micro-batch's filter-cascade funnel contribution (r12): the
-    per-(source, decision) cells for THIS batch's documents, written
-    under batch_id=N (the overwrite-partition idempotence contract — a
-    replayed batch overwrites itself, never double-counts). State is
+    per-(source, decision) cells for THIS batch's documents. State is
     purely ADDITIVE and bounded at |sources| x 6 rows per batch: the
     cascade decision is per-document scan-local, so disjoint batches
     contribute independent cells."""
     from ..operators.corpus import cascade_cells
 
-    cascade_cells(batch_docs).write.mode("overwrite").parquet(
-        f"{state_dir}/cascade/batch_id={batch_id}"
-    )
+    _write_state(cascade_cells(batch_docs), state_dir, "cascade", batch_id)
 
 
 def incremental_filter_cascade(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -1541,13 +1258,11 @@ def incremental_filter_cascade(spark: SparkSession, state_dir: str) -> DataFrame
     (`test_incremental_cascade_equals_batch`). The live twin of the
     gated funnel dashboard: as crawl shards land, the keep/reject
     breakdown stays current without re-scanning the corpus."""
-    if not os.path.isdir(f"{state_dir}/cascade"):
-        return spark.sql(
-            "SELECT CAST(NULL AS STRING) source, CAST(NULL AS STRING) decision, "
-            "CAST(0 AS BIGINT) n_docs, CAST(0 AS BIGINT) tot_tokens"
-        ).limit(0)
     return (
-        spark.read.parquet(f"{state_dir}/cascade")
+        _read_state(
+            spark, state_dir, "cascade",
+            "source string, decision string, n_docs bigint, tot_tokens bigint",
+        )
         .groupBy("source", "decision")
         .agg(
             F.sum("n_docs").alias("n_docs"),
@@ -1557,25 +1272,11 @@ def incremental_filter_cascade(spark: SparkSession, state_dir: str) -> DataFrame
     )
 
 
-def attach_cascade_stream(stream_docs: DataFrame, state_dir: str, checkpoint: str):
-    """Wire the cascade-cell accumulator onto a document stream via
-    foreachBatch (the dashboard-family contract); read the funnel at any
-    time with incremental_filter_cascade."""
-    return (
-        stream_docs.writeStream.foreachBatch(
-            lambda df, bid: cascade_state_batch(df, state_dir, bid)
-        )
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
-
-
 def source_cap_state_batch(
-    batch_docs: DataFrame, state_dir: str, batch_id: int = -1
+    batch_docs: DataFrame, state_dir: str, batch_id: int
 ) -> None:
     """One micro-batch's per-source cap candidates (r12): THIS batch's
-    quality-top-K per source, written under batch_id=N (overwrite-
-    partition idempotence). State is MERGEABLE by re-ranking rather than
+    quality-top-K per source. State is MERGEABLE by re-ranking rather than
     additive: because batches partition the corpus, the global top-K per
     source is a subset of the union of per-batch top-Ks (any row in the
     global top-K is in the top-K of its own batch a fortiori), so keeping
@@ -1583,9 +1284,7 @@ def source_cap_state_batch(
     K x |sources| per batch regardless of batch size."""
     from ..operators.corpus import source_cap_candidates
 
-    source_cap_candidates(batch_docs).write.mode("overwrite").parquet(
-        f"{state_dir}/source_cap/batch_id={batch_id}"
-    )
+    _write_state(source_cap_candidates(batch_docs), state_dir, "source_cap", batch_id)
 
 
 def incremental_source_cap(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -1596,46 +1295,23 @@ def incremental_source_cap(spark: SparkSession, state_dir: str) -> DataFrame:
     argument above (`test_incremental_source_cap_equals_batch`)."""
     from ..operators.corpus import source_cap_rank
 
-    if not os.path.isdir(f"{state_dir}/source_cap"):
-        return spark.sql(
-            "SELECT CAST(NULL AS BIGINT) doc_id, CAST(NULL AS STRING) source, "
-            "CAST(0 AS BIGINT) q_ppm, CAST(0 AS INT) q_rank"
-        ).limit(0)
-    survivors = spark.read.parquet(f"{state_dir}/source_cap").select(
-        "doc_id", "source", "q_ppm"
-    )
+    survivors = _read_state(
+        spark, state_dir, "source_cap", "doc_id bigint, source string, q_ppm bigint"
+    ).select("doc_id", "source", "q_ppm")
     return source_cap_rank(survivors).orderBy("source", "q_rank")
-
-
-def attach_source_cap_stream(
-    stream_docs: DataFrame, state_dir: str, checkpoint: str
-):
-    """Wire the per-batch cap-candidate accumulator onto a document
-    stream via foreachBatch; read the live keeper set at any time with
-    incremental_source_cap."""
-    return (
-        stream_docs.writeStream.foreachBatch(
-            lambda df, bid: source_cap_state_batch(df, state_dir, bid)
-        )
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
 
 
 # ------------------------------------------- IVF index maintenance (r13)
 
 
 def ivf_assign_state_batch(
-    batch_df: DataFrame, index_path: str, state_dir: str, batch_id: int = -1
+    batch_df: DataFrame, index_path: str, state_dir: str, batch_id: int
 ) -> None:
     """One micro-batch of ARRIVING vectors assigned to the FROZEN coarse
     quantizer persisted at ``{index_path}/centroids`` (the materialized
     IVF index of operators/similarity.write_ivf_index): per-vector
-    nearest-cell argmax plus the exact ppm cosine fit, written under a
-    ``batch_id=`` partition with mode("overwrite") — the idempotence
-    contract every incremental_* dashboard shares, so a replayed batch
-    REPLACES its own partition instead of double-counting. Expects
-    (vec_id, embedding array<float>). VERDICT r12 #5."""
+    nearest-cell argmax plus the exact ppm cosine fit. Expects (vec_id,
+    embedding array<float>). VERDICT r12 #5."""
     from ..functions.vectors import as_double_array
     from ..operators.similarity import ivf_assign_cells
 
@@ -1644,26 +1320,7 @@ def ivf_assign_state_batch(
     new_emb = batch_df.select(
         "vec_id", as_double_array("embedding").alias("v")
     )
-    ivf_assign_cells(new_emb, cents).write.mode("overwrite").parquet(
-        f"{state_dir}/ivf_assign/batch_id={batch_id}"
-    )
-
-
-def attach_ivf_assign_stream(
-    stream_vec: DataFrame, index_path: str, state_dir: str, checkpoint: str
-) -> StreamingQuery:
-    """Wire frozen-quantizer cell assignment onto an arriving-vector
-    stream via foreachBatch; read the live staleness report at any time
-    with incremental_ivf_staleness."""
-    return (
-        stream_vec.writeStream.foreachBatch(
-            lambda df, bid: ivf_assign_state_batch(
-                df, index_path, state_dir, bid
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
+    _write_state(ivf_assign_cells(new_emb, cents), state_dir, "ivf_assign", batch_id)
 
 
 def incremental_ivf_staleness(
@@ -1690,17 +1347,14 @@ def incremental_ivf_staleness(
             _cos_ppm(F.col("v"), F.col("c")).alias("cos_ppm"),
         )
     )
-    if os.path.isdir(f"{state_dir}/ivf_assign"):
-        new_sc = spark.read.parquet(f"{state_dir}/ivf_assign").select(
-            "cell", "cos_ppm"
-        )
-    else:
-        new_sc = spark.createDataFrame([], "cell int, cos_ppm long")
+    new_sc = _read_state(
+        spark, state_dir, "ivf_assign", "vec_id bigint, cell int, cos_ppm bigint"
+    ).select("cell", "cos_ppm")
     return ivf_staleness_report(base_sc, new_sc)
 
 
 def kcenter_state_batch(
-    batch_emb: DataFrame, cents: DataFrame, state_dir: str, batch_id: int = -1
+    batch_emb: DataFrame, cents: DataFrame, state_dir: str, batch_id: int
 ) -> None:
     """Staged r15: one micro-batch's coverage-sample CANDIDATES against a
     FROZEN coarse quantizer — the streaming twin of
@@ -1711,9 +1365,7 @@ def kcenter_state_batch(
     batch's per-cell top (resp. bottom) take, so keeping each batch's
     two-sided take — ≤ |cells|·(core+frontier) rows of state per batch,
     corpus-size-independent — loses no candidate the global selection
-    can ever pick. Expects (vec_id, label, embedding array<float>);
-    state written under a ``batch_id=`` partition with the
-    overwrite-idempotence contract of the dashboard family."""
+    can ever pick. Expects (vec_id, label, embedding array<float>)."""
     from ..functions.vectors import as_double_array
     from ..operators.similarity import _cos_ppm, kcenter_sample
 
@@ -1726,11 +1378,10 @@ def kcenter_state_batch(
     )
     # the batch's own two-sided take IS the bounded candidate set; roles
     # and ranks recompute at assembly over the merged candidates
-    kcenter_sample(scored).select(
+    take = kcenter_sample(scored).select(
         F.col("cell").alias("label"), "vec_id", "cos_ppm"
-    ).write.mode("overwrite").parquet(
-        f"{state_dir}/kcenter/batch_id={batch_id}"
     )
+    _write_state(take, state_dir, "kcenter", batch_id)
 
 
 def incremental_kcenter_sample(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -1745,13 +1396,10 @@ def incremental_kcenter_sample(spark: SparkSession, state_dir: str) -> DataFrame
     vector hold two ranks)."""
     from ..operators.similarity import kcenter_sample
 
-    if not os.path.isdir(f"{state_dir}/kcenter"):
-        return spark.createDataFrame(
-            [],
-            "cell int, vec_id long, cos_ppm long, role string, pick_rank long",
-        )
     cand = (
-        spark.read.parquet(f"{state_dir}/kcenter")
+        _read_state(
+            spark, state_dir, "kcenter", "label int, vec_id bigint, cos_ppm bigint"
+        )
         .select("vec_id", "label", "cos_ppm")
         .distinct()
     )
@@ -1761,31 +1409,23 @@ def incremental_kcenter_sample(spark: SparkSession, state_dir: str) -> DataFrame
 # --------------------------------------------- CUSUM change-points (r13)
 
 
-def cusum_state_batch(
-    batch_df: DataFrame, state_dir: str, batch_id: int = -1
-) -> None:
+def cusum_state_batch(batch_df: DataFrame, state_dir: str, batch_id: int) -> None:
     """One micro-batch's per-(event_type, day) value-cent sums — ADDITIVE
-    state (cents add per cell), written under a batch_id= partition with
-    the overwrite idempotence contract of the dashboard family."""
+    state (cents add per cell)."""
     from ..plans.events import cusum_daily_agg
 
-    cusum_daily_agg(batch_df).write.mode("overwrite").parquet(
-        f"{state_dir}/cusum/batch_id={batch_id}"
-    )
+    _write_state(cusum_daily_agg(batch_df), state_dir, "cusum", batch_id)
 
 
-def attach_cusum_stream(
-    stream_ev: DataFrame, state_dir: str, checkpoint: str
-) -> StreamingQuery:
-    """Wire the daily-cell accumulator onto an events stream via
-    foreachBatch; read the live change-point report at any time with
-    incremental_cusum."""
+def _cusum_daily(spark: SparkSession, state_dir: str) -> DataFrame:
+    """The merged (event_type, day, v_cents) cells both cusum readers run
+    their finisher over."""
     return (
-        stream_ev.writeStream.foreachBatch(
-            lambda df, bid: cusum_state_batch(df, state_dir, bid)
+        _read_state(
+            spark, state_dir, "cusum", "event_type string, day string, v_cents bigint"
         )
-        .option("checkpointLocation", checkpoint)
-        .start()
+        .groupBy("event_type", "day")
+        .agg(F.sum("v_cents").alias("v_cents"))
     )
 
 
@@ -1797,18 +1437,7 @@ def incremental_cusum(spark: SparkSession, state_dir: str) -> DataFrame:
     boundaries cannot matter (`test_incremental_cusum_equals_batch`)."""
     from ..plans.events import cusum_flag
 
-    if not os.path.isdir(f"{state_dir}/cusum"):
-        return spark.createDataFrame(
-            [],
-            "event_type string, day string, v_cents long, s_up long, "
-            "s_dn long, direction string",
-        )
-    daily = (
-        spark.read.parquet(f"{state_dir}/cusum")
-        .groupBy("event_type", "day")
-        .agg(F.sum("v_cents").alias("v_cents"))
-    )
-    return cusum_flag(daily)
+    return cusum_flag(_cusum_daily(spark, state_dir))
 
 
 def incremental_seasonal_backtest(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -1821,31 +1450,15 @@ def incremental_seasonal_backtest(spark: SparkSession, state_dir: str) -> DataFr
     (`test_incremental_seasonal_backtest_equals_batch`)."""
     from ..plans.events import seasonal_backtest
 
-    if not os.path.isdir(f"{state_dir}/cusum"):
-        return spark.createDataFrame(
-            [],
-            "event_type string, n_days_scored long, sae_seasonal_cents long, "
-            "sae_naive1_cents long, mase double",
-        )
-    daily = (
-        spark.read.parquet(f"{state_dir}/cusum")
-        .groupBy("event_type", "day")
-        .agg(F.sum("v_cents").alias("v_cents"))
-    )
-    return seasonal_backtest(daily)
+    return seasonal_backtest(_cusum_daily(spark, state_dir))
 
 
-def did_state_batch(
-    batch_df: DataFrame, state_dir: str, batch_id: int = -1
-) -> None:
+def did_state_batch(batch_df: DataFrame, state_dir: str, batch_id: int) -> None:
     """One micro-batch's per-(arm, day) DiD cells — ADDITIVE state (n/s
-    add per cell), written under a batch_id= partition with the
-    overwrite idempotence contract of the dashboard family."""
+    add per cell)."""
     from ..plans.experiments import did_daily_agg
 
-    did_daily_agg(batch_df).write.mode("overwrite").parquet(
-        f"{state_dir}/did/batch_id={batch_id}"
-    )
+    _write_state(did_daily_agg(batch_df), state_dir, "did", batch_id)
 
 
 def incremental_did_lift(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -1855,38 +1468,29 @@ def incremental_did_lift(spark: SparkSession, state_dir: str) -> DataFrame:
     `did_lift_report` finisher — the pre/post boundary re-derives from
     the assembled cells' own min/max day, so a late batch that extends
     the observation window MOVES the boundary exactly as the batch op
-    would (`test_incremental_did_lift_equals_batch`)."""
+    would (`test_incremental_did_lift_equals_batch`). Before the first
+    batch it has no rows."""
     from ..plans.experiments import did_lift_report
 
-    if not os.path.isdir(f"{state_dir}/did"):
-        return spark.createDataFrame(
-            [],
-            "experiment string, n_pre_ctrl long, s_pre_ctrl long, "
-            "n_pre_treat long, s_pre_treat long, n_post_ctrl long, "
-            "s_post_ctrl long, n_post_treat long, s_post_treat long, "
-            "did_milli_centi long",
-        )
     cells = (
-        spark.read.parquet(f"{state_dir}/did")
+        _read_state(
+            spark, state_dir, "did", "treat boolean, day timestamp, n bigint, s bigint"
+        )
         .groupBy("treat", "day")
         .agg(F.sum("n").alias("n"), F.sum("s").alias("s"))
     )
-    return did_lift_report(cells)
+    report = did_lift_report(cells)
+    return report if _has_state(state_dir, "did") else report.limit(0)
 
 
-def cuped_state_batch(
-    batch_df: DataFrame, state_dir: str, batch_id: int = -1
-) -> None:
+def cuped_state_batch(batch_df: DataFrame, state_dir: str, batch_id: int) -> None:
     """One micro-batch's per-(user, day) CUPED cells — ADDITIVE state
-    (n/s add per cell), written under a batch_id= partition with the
-    overwrite idempotence contract. One key finer than the DiD cells
+    (n/s add per cell). One key finer than the DiD cells
     because CUPED's finisher needs per-USER pre/post sums; arms need no
     state at all (re-derived from user_id by the deterministic hash)."""
     from ..plans.experiments import cuped_user_day_agg
 
-    cuped_user_day_agg(batch_df).write.mode("overwrite").parquet(
-        f"{state_dir}/cuped/batch_id={batch_id}"
-    )
+    _write_state(cuped_user_day_agg(batch_df), state_dir, "cuped", batch_id)
 
 
 def incremental_cuped(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -1896,35 +1500,27 @@ def incremental_cuped(spark: SparkSession, state_dir: str) -> DataFrame:
     — the pre/post boundary re-derives from the assembled cells' own
     min/max day, so a late batch that extends the observation window
     moves every user's x/y split exactly as the batch op would
-    (`test_incremental_cuped_equals_batch`)."""
+    (`test_incremental_cuped_equals_batch`). Before the first batch it has
+    no rows."""
     from ..plans.experiments import cuped_report
 
-    if not os.path.isdir(f"{state_dir}/cuped"):
-        return spark.createDataFrame(
-            [],
-            "experiment string, n_users long, n_treat long, n_ctrl long, "
-            "theta_milli long, lift_raw_milli_centi long, "
-            "lift_adj_milli_centi long, var_reduction_ppm long",
-        )
     cells = (
-        spark.read.parquet(f"{state_dir}/cuped")
+        _read_state(
+            spark, state_dir, "cuped", "user_id bigint, day timestamp, s bigint"
+        )
         .groupBy("user_id", "day")
         .agg(F.sum("s").alias("s"))
     )
-    return cuped_report(cells)
+    report = cuped_report(cells)
+    return report if _has_state(state_dir, "cuped") else report.limit(0)
 
 
-def epoch_state_batch(
-    batch_docs: DataFrame, state_dir: str, batch_id: int = -1
-) -> None:
+def epoch_state_batch(batch_docs: DataFrame, state_dir: str, batch_id: int) -> None:
     """One micro-batch's per-source epoch-planning cells — ADDITIVE
-    state (doc/token counts add per source), written under a batch_id=
-    partition with the overwrite idempotence contract."""
+    state (doc/token counts add per source)."""
     from ..operators.corpus import epoch_source_agg
 
-    epoch_source_agg(batch_docs).write.mode("overwrite").parquet(
-        f"{state_dir}/epoch/batch_id={batch_id}"
-    )
+    _write_state(epoch_source_agg(batch_docs), state_dir, "epoch", batch_id)
 
 
 def incremental_epoch_schedule(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -1937,14 +1533,10 @@ def incremental_epoch_schedule(spark: SparkSession, state_dir: str) -> DataFrame
     the batch op would (`test_incremental_epoch_schedule_equals_batch`)."""
     from ..operators.corpus import epoch_schedule_report
 
-    if not os.path.isdir(f"{state_dir}/epoch"):
-        return spark.createDataFrame(
-            [],
-            "source string, n_docs long, n_tokens long, quota_tokens long, "
-            "epochs_milli long, capped boolean",
-        )
     cells = (
-        spark.read.parquet(f"{state_dir}/epoch")
+        _read_state(
+            spark, state_dir, "epoch", "source string, n_docs bigint, n_tokens bigint"
+        )
         .groupBy("source")
         .agg(
             F.sum("n_docs").cast("long").alias("n_docs"),
@@ -1954,16 +1546,12 @@ def incremental_epoch_schedule(spark: SparkSession, state_dir: str) -> DataFrame
     return epoch_schedule_report(cells)
 
 
-def ldiv_state_batch(
-    batch_docs: DataFrame, state_dir: str, batch_id: int = -1
-) -> None:
+def ldiv_state_batch(batch_docs: DataFrame, state_dir: str, batch_id: int) -> None:
     """One micro-batch's l-diversity sensitive-value cells — ADDITIVE
-    state (counts add per (QI, lang) cell), overwrite-idempotent."""
+    state (counts add per (QI, lang) cell)."""
     from ..operators.dataquality import l_diversity_cells
 
-    l_diversity_cells(batch_docs).write.mode("overwrite").parquet(
-        f"{state_dir}/ldiv/batch_id={batch_id}"
-    )
+    _write_state(l_diversity_cells(batch_docs), state_dir, "ldiv", batch_id)
 
 
 def incremental_l_diversity(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -1975,13 +1563,11 @@ def incremental_l_diversity(spark: SparkSession, state_dir: str) -> DataFrame:
     (`test_incremental_l_diversity_equals_batch`)."""
     from ..operators.dataquality import l_diversity_report
 
-    if not os.path.isdir(f"{state_dir}/ldiv"):
-        return spark.createDataFrame(
-            [],
-            "source string, chars_bucket long, n long, n_langs long",
-        )
     cells = (
-        spark.read.parquet(f"{state_dir}/ldiv")
+        _read_state(
+            spark, state_dir, "ldiv",
+            "source string, chars_bucket bigint, lang string, n bigint",
+        )
         .groupBy("source", "chars_bucket", "lang")
         .agg(F.sum("n").cast("long").alias("n"))
     )
@@ -1991,31 +1577,13 @@ def incremental_l_diversity(spark: SparkSession, state_dir: str) -> DataFrame:
 # ------------------------------------------------ streaming k-core (r13)
 
 
-def kcore_state_batch(
-    batch_edges: DataFrame, state_dir: str, batch_id: int = -1
-) -> None:
+def kcore_state_batch(batch_edges: DataFrame, state_dir: str, batch_id: int) -> None:
     """One micro-batch of arriving (src, dst) edges, deduped within the
-    batch and written under a batch_id= partition with the overwrite
-    idempotence contract. Cross-batch duplicates are fine: the read side
+    batch. Cross-batch duplicates are fine: the read side
     dedupes the union (k_core() starts with a distinct), so edge
     re-delivery cannot change the core."""
-    batch_edges.select("src", "dst").distinct().write.mode(
-        "overwrite"
-    ).parquet(f"{state_dir}/kcore_edges/batch_id={batch_id}")
-
-
-def attach_kcore_stream(
-    stream_edges: DataFrame, state_dir: str, checkpoint: str
-) -> StreamingQuery:
-    """Wire the edge accumulator onto an edge stream via foreachBatch;
-    read the live k-core with incremental_k_core."""
-    return (
-        stream_edges.writeStream.foreachBatch(
-            lambda df, bid: kcore_state_batch(df, state_dir, bid)
-        )
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
+    edges = batch_edges.select("src", "dst").distinct()
+    _write_state(edges, state_dir, "kcore_edges", batch_id)
 
 
 def incremental_k_core(
@@ -2030,42 +1598,23 @@ def incremental_k_core(
     monotone pytest pins."""
     from ..operators.graph import KC_K, k_core
 
-    if not os.path.isdir(f"{state_dir}/kcore_edges"):
-        return spark.createDataFrame([], "node string, core_deg bigint")
-    edges = spark.read.parquet(f"{state_dir}/kcore_edges").select("src", "dst")
+    edges = _read_state(
+        spark, state_dir, "kcore_edges", "src string, dst string"
+    ).select("src", "dst")
     return k_core(edges, k=KC_K if k is None else k)
 
 
 # ------------------------------------------------- streaming PMI (r13)
 
 
-def pmi_state_batch(
-    batch_docs: DataFrame, state_dir: str, batch_id: int = -1
-) -> None:
+def pmi_state_batch(batch_docs: DataFrame, state_dir: str, batch_id: int) -> None:
     """One micro-batch's adjacent-bigram pair counts — ADDITIVE state
     (counts add per (w1, w2) cell; unigram counts and the total are
     marginals of the same cells, so NO separate unigram state can drift
-    out of sync), under the batch_id= overwrite idempotence contract."""
+    out of sync)."""
     from ..operators.text_analysis import pmi_pair_counts
 
-    pmi_pair_counts(batch_docs).write.mode("overwrite").parquet(
-        f"{state_dir}/pmi_pairs/batch_id={batch_id}"
-    )
-
-
-def attach_pmi_stream(
-    stream_docs: DataFrame, state_dir: str, checkpoint: str
-) -> StreamingQuery:
-    """Wire the pair-count accumulator onto a document stream via
-    foreachBatch; read the live collocation ranking at any time with
-    incremental_pmi."""
-    return (
-        stream_docs.writeStream.foreachBatch(
-            lambda df, bid: pmi_state_batch(df, state_dir, bid)
-        )
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
+    _write_state(pmi_pair_counts(batch_docs), state_dir, "pmi_pairs", batch_id)
 
 
 def incremental_pmi(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -2076,14 +1625,10 @@ def incremental_pmi(spark: SparkSession, state_dir: str) -> DataFrame:
     (`test_incremental_pmi_equals_batch`)."""
     from ..operators.text_analysis import pmi_from_pairs
 
-    if not os.path.isdir(f"{state_dir}/pmi_pairs"):
-        return spark.createDataFrame(
-            [],
-            "w1 string, w2 string, n_pair long, n_w1 long, n_w2 long, "
-            "pmi_ratio_ppm long",
-        )
     pair = (
-        spark.read.parquet(f"{state_dir}/pmi_pairs")
+        _read_state(
+            spark, state_dir, "pmi_pairs", "w1 string, w2 string, n_pair bigint"
+        )
         .groupBy("w1", "w2")
         .agg(F.sum("n_pair").alias("n_pair"))
     )

@@ -2,6 +2,8 @@
 through the blob file-stream → cleaning → append sink must materialize the
 batch-cleaned tables exactly. Also exercises watermarked windowed counts."""
 
+import os
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -49,6 +51,19 @@ def test_stream_equals_batch(spark, stream_out):
 def test_checkpoints_are_per_query(stream_out):
     cps = sorted(p.name for p in (stream_out / "_checkpoints").iterdir())
     assert cps == ["geo_etl", "pin_etl", "user_etl"]
+
+
+def test_cleaned_stream_is_the_batch_cleaning_pipeline(spark, tmp_path):
+    """cleaned_stream (ST2) is an unbounded DataFrame with exactly the
+    columns and dtypes the batch cleaner produces from the same blob
+    files: decode and clean are the same code on both sides."""
+    paths = write_blob_stream_files(str(tmp_path), n=20, seed=SEED)
+    for table, path in paths.items():
+        stream = SP.cleaned_stream(spark, path, table)
+        blobs = spark.read.schema(SP.BLOB_SCHEMA).json(path)
+        batch = SP.CLEANERS[table](SP.decode_blob(blobs, SP.RAW_BY_TABLE[table]))
+        assert stream.isStreaming, table
+        assert stream.dtypes == batch.dtypes, table
 
 
 def test_dedup_stream_drops_repeats_within_watermark(spark, tmp_path):
@@ -789,7 +804,7 @@ def test_incremental_dq_equals_batch_and_sees_cross_batch_dups(spark, tmp_path):
         dq_orders_constraints,
     )
     from pinterest_data_pipeline218_spark.streaming.pipeline import (
-        attach_dq_stream,
+        attach_state_stream,
         dq_state_batch,
         incremental_dq,
     )
@@ -843,7 +858,10 @@ def test_incremental_dq_equals_batch_and_sees_cross_batch_dups(spark, tmp_path):
         spark.readStream.format("json").schema(schema)
         .option("maxFilesPerTrigger", "1").load(str(src))
     )
-    q = attach_dq_stream(stream, customer, state, str(tmp_path / "cp_dq"))
+    q = attach_state_stream(
+        stream, str(tmp_path / "cp_dq"),
+        lambda df, bid: dq_state_batch(df, customer, state, bid),
+    )
     q.processAllAvailable()
     q.stop()
 
@@ -1078,6 +1096,34 @@ def test_observed_srm_metrics_batch_and_stream(spark, tmp_path):
     assert len(seen) == 2
     flags = sorted(m["srm_flag_ab_50_50"] for m in seen)
     assert flags == [False, True]  # healthy batch clean, outage flagged
+
+
+def test_srm_flag_fires_only_beyond_the_row_band(spark):
+    """The in-flight SRM siren flags a design exactly when the treatment
+    ROW share deviates from the intended ratio by MORE than
+    SRM_ROW_DRIFT_PCT percent, relative: sweeping a 10-row batch from all
+    control to all treatment on the 50/50 design crosses the band on
+    both sides, and a deviation exactly AT the band does not flag."""
+    from pyspark.sql import Observation
+
+    from pinterest_data_pipeline218_spark.functions import text as T
+
+    users = spark.range(1, 100).select(F.col("id").alias("user_id"))
+    arm2 = F.pmod(T.token_hash(F.col("user_id").cast("string"), seed=2), F.lit(2))
+    treat, ctrl = (users.filter(c).first().user_id for c in (arm2 < 1, arm2 >= 1))
+    n, flags = 10, set()
+    for nt in range(n + 1):
+        rows = [(treat,)] * nt + [(ctrl,)] * (n - nt)
+        obs = Observation(f"srm_band_{nt}")
+        SP.with_srm_metrics(spark.createDataFrame(rows, "user_id long"), obs).write.mode(
+            "overwrite"
+        ).format("noop").save()
+        got = obs.get
+        assert got["nt_ab_50_50"] == nt
+        want = abs(2 * nt - n) * 100 > SP.SRM_ROW_DRIFT_PCT * n
+        assert got["srm_flag_ab_50_50"] is want, nt
+        flags.add(want)
+    assert flags == {True, False}
 
 
 def test_decode_quarantine_splits_corrupt_records(spark, tmp_path):
@@ -1346,8 +1392,9 @@ def test_incremental_quality_report_equals_batch(spark, tmp_path):
 
     from pinterest_data_pipeline218_spark.operators.corpus import quality_report_vs
     from pinterest_data_pipeline218_spark.streaming.pipeline import (
-        attach_quality_report_stream,
+        attach_state_stream,
         incremental_quality_report,
+        quality_state_batch,
     )
 
     schema = StructType(
@@ -1388,8 +1435,9 @@ def test_incremental_quality_report_equals_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", "1").load(str(src))
     )
     state = str(tmp_path / "state")
-    q = attach_quality_report_stream(
-        stream, bench, state, str(tmp_path / "cp")
+    q = attach_state_stream(
+        stream, str(tmp_path / "cp"),
+        lambda df, bid: quality_state_batch(df, bench, state, bid),
     )
     q.processAllAvailable()
     q.stop()
@@ -2134,7 +2182,7 @@ def test_incremental_hll_equals_batch(spark, tmp_path):
 
 
 def test_attach_hll_stream_end_to_end(spark, tmp_path):
-    """attach_hll_stream drives hll_state_batch with Structured
+    """attach_state_stream drives hll_state_batch with Structured
     Streaming's real batch ids: file-triggered micro-batches accumulate
     daily sketch partials, and the weekly read-side equals the batch
     rollup over the union."""
@@ -2147,7 +2195,8 @@ def test_attach_hll_stream_end_to_end(spark, tmp_path):
         hll_weekly_rollup,
     )
     from pinterest_data_pipeline218_spark.streaming.pipeline import (
-        attach_hll_stream,
+        attach_state_stream,
+        hll_state_batch,
         incremental_hll_weekly,
     )
 
@@ -2172,7 +2221,9 @@ def test_attach_hll_stream_end_to_end(spark, tmp_path):
         .option("maxFilesPerTrigger", "1").load(str(src))
     )
     state = str(tmp_path / "state")
-    q = attach_hll_stream(stream, state, str(tmp_path / "cp"))
+    q = attach_state_stream(
+        stream, str(tmp_path / "cp"), lambda df, bid: hll_state_batch(df, state, bid)
+    )
     q.processAllAvailable()
     q.stop()
 
@@ -2254,17 +2305,23 @@ def test_incremental_states_tolerate_all_empty_batches(spark, tmp_path):
     """An empty micro-batch (quiet trigger) still writes its batch_id
     partition; assembly over ONLY-empty state must not crash: the funnel
     returns its zero-count rows with NULL conversion (the nullif guard —
-    previously an ANSI divide-by-zero), and the sketch assemblies return
-    empty."""
+    previously an ANSI divide-by-zero), the sketch assemblies return
+    empty, and the data-quality and curation reports stay the all-zero
+    report they are before the first batch (an empty batch lands NULL
+    sums, which must count as zero violations / tokens)."""
     from pinterest_data_pipeline218_spark.streaming.pipeline import (
         cm_state_batch,
+        dq_state_batch,
         funnel_state_batch,
         hist_state_batch,
         incremental_cm_top_users,
+        incremental_dq,
         incremental_funnel,
         incremental_hist_quantiles,
         incremental_kmv,
+        incremental_quality_report,
         kmv_state_batch,
+        quality_state_batch,
     )
 
     empty = spark.createDataFrame(
@@ -2282,6 +2339,193 @@ def test_incremental_states_tolerate_all_empty_batches(spark, tmp_path):
     assert incremental_hist_quantiles(spark, h).collect() == []
     cm_state_batch(empty, c, 0)
     assert incremental_cm_top_users(spark, c).collect() == []
+
+    never = str(tmp_path / "never")
+    dq, quality = str(tmp_path / "dq"), str(tmp_path / "quality")
+    orders = spark.createDataFrame(
+        [],
+        "o_orderkey long, o_custkey long, o_orderstatus string, "
+        "o_totalprice double, o_orderdate timestamp",
+    )
+    customer = spark.createDataFrame([(1,)], "c_custkey long")
+    dq_state_batch(orders, customer, dq, 0)
+    rows = incremental_dq(spark, dq).collect()
+    assert [(r.n_violations, r["pass"]) for r in rows] == [(0, True)] * 6
+    assert rows == incremental_dq(spark, never).collect()
+    docs = spark.createDataFrame(
+        [], "doc_id long, text string, lang string, source string"
+    )
+    bench = spark.createDataFrame([(1, "a benchmark passage")], "doc_id long, text string")
+    quality_state_batch(docs, bench, quality, 0)
+    rows = incremental_quality_report(spark, quality).collect()
+    assert (rows[0].n_docs, rows[0].n_tokens, rows[0].quality_pass_bp) == (0, 0, None)
+    assert rows == incremental_quality_report(spark, never).collect()
+
+
+PERFBENCH_SF = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), os.pardir, "perfbench", "data", "sf0.01"
+)
+
+
+@pytest.fixture(scope="module")
+def dashboard_inputs(spark, tmp_path_factory):
+    """One real micro-batch for every incremental dashboard: the sf0.01
+    events, documents, orders/customer and embeddings, plus the frozen
+    IVF index / quantizer and a string edge list derived from them."""
+    from types import SimpleNamespace
+
+    from pinterest_data_pipeline218_spark.data import load_table
+    from pinterest_data_pipeline218_spark.functions.vectors import as_double_array
+    from pinterest_data_pipeline218_spark.operators.similarity import (
+        build_ivf_centroids,
+        write_ivf_index,
+    )
+
+    def table(name):
+        return load_table(spark, PERFBENCH_SF, name)
+
+    emb = table("embeddings")
+    vecs = emb.select("vec_id", "label", as_double_array("embedding").alias("v"))
+    index_path = str(tmp_path_factory.mktemp("ivf") / "index")
+    write_ivf_index(vecs, index_path)
+    ev, docs = table("events"), table("documents")
+    edges = ev.select(
+        F.col("user_id").cast("string").alias("src"), F.col("event_type").alias("dst")
+    )
+    return SimpleNamespace(
+        ev=ev,
+        docs=docs,
+        bench=docs.filter(F.col("doc_id") % 97 == 0).select("doc_id", "text"),
+        orders=table("orders"),
+        customer=table("customer"),
+        emb=emb,
+        index_path=index_path,
+        cents=build_ivf_centroids(vecs).localCheckpoint(),
+        edges=edges.unionAll(edges.select("dst", "src")),
+    )
+
+
+# dashboard -> (land one batch of state from the inputs, assemble the result)
+DASHBOARDS = {
+    "quality": (
+        lambda d, s: SP.quality_state_batch(d.docs, d.bench, s, 0),
+        lambda spark, d, s: SP.incremental_quality_report(spark, s),
+    ),
+    "retention": (
+        lambda d, s: SP.retention_state_batch(d.ev, s, 0),
+        lambda spark, d, s: SP.incremental_retention_triangle(spark, s),
+    ),
+    "funnel": (
+        lambda d, s: SP.funnel_state_batch(d.ev, s, 0),
+        lambda spark, d, s: SP.incremental_funnel(spark, s),
+    ),
+    "kmv": (
+        lambda d, s: SP.kmv_state_batch(d.ev, s, 0),
+        lambda spark, d, s: SP.incremental_kmv(spark, s),
+    ),
+    "hist": (
+        lambda d, s: SP.hist_state_batch(d.ev, s, 0),
+        lambda spark, d, s: SP.incremental_hist_quantiles(spark, s),
+    ),
+    "cm": (
+        lambda d, s: SP.cm_state_batch(d.ev, s, 0),
+        lambda spark, d, s: SP.incremental_cm_top_users(spark, s),
+    ),
+    "drift": (
+        lambda d, s: SP.drift_state_batch(d.ev, s, 0),
+        lambda spark, d, s: SP.incremental_events_drift(spark, d.ev, s),
+    ),
+    "hll": (
+        lambda d, s: SP.hll_state_batch(d.ev, s, 0),
+        lambda spark, d, s: SP.incremental_hll_weekly(spark, s),
+    ),
+    "gapfill": (
+        lambda d, s: SP.gapfill_state_batch(d.ev, s, 0),
+        lambda spark, d, s: SP.incremental_gapfill(spark, s),
+    ),
+    "markov": (
+        lambda d, s: SP.markov_state_batch(d.ev, s, 0),
+        lambda spark, d, s: SP.incremental_markov(spark, s),
+    ),
+    "rolling7d": (
+        lambda d, s: SP.rolling7d_state_batch(d.ev, s, 0),
+        lambda spark, d, s: SP.incremental_rolling_7d(spark, s),
+    ),
+    "journey": (
+        lambda d, s: SP.journey_state_batch(d.ev, s, 0),
+        lambda spark, d, s: SP.incremental_journey(spark, s),
+    ),
+    "dq": (
+        lambda d, s: SP.dq_state_batch(d.orders, d.customer, s, 0),
+        lambda spark, d, s: SP.incremental_dq(spark, s),
+    ),
+    "cascade": (
+        lambda d, s: SP.cascade_state_batch(d.docs, s, 0),
+        lambda spark, d, s: SP.incremental_filter_cascade(spark, s),
+    ),
+    "source_cap": (
+        lambda d, s: SP.source_cap_state_batch(d.docs, s, 0),
+        lambda spark, d, s: SP.incremental_source_cap(spark, s),
+    ),
+    "ivf": (
+        lambda d, s: SP.ivf_assign_state_batch(
+            d.emb.select("vec_id", "embedding"), d.index_path, s, 0
+        ),
+        lambda spark, d, s: SP.incremental_ivf_staleness(spark, d.index_path, s),
+    ),
+    "kcenter": (
+        lambda d, s: SP.kcenter_state_batch(d.emb, d.cents, s, 0),
+        lambda spark, d, s: SP.incremental_kcenter_sample(spark, s),
+    ),
+    "cusum": (
+        lambda d, s: SP.cusum_state_batch(d.ev, s, 0),
+        lambda spark, d, s: SP.incremental_cusum(spark, s),
+    ),
+    "seasonal_backtest": (
+        lambda d, s: SP.cusum_state_batch(d.ev, s, 0),
+        lambda spark, d, s: SP.incremental_seasonal_backtest(spark, s),
+    ),
+    "did": (
+        lambda d, s: SP.did_state_batch(d.ev, s, 0),
+        lambda spark, d, s: SP.incremental_did_lift(spark, s),
+    ),
+    "cuped": (
+        lambda d, s: SP.cuped_state_batch(d.ev, s, 0),
+        lambda spark, d, s: SP.incremental_cuped(spark, s),
+    ),
+    "epoch": (
+        lambda d, s: SP.epoch_state_batch(d.docs, s, 0),
+        lambda spark, d, s: SP.incremental_epoch_schedule(spark, s),
+    ),
+    "ldiv": (
+        lambda d, s: SP.ldiv_state_batch(d.docs, s, 0),
+        lambda spark, d, s: SP.incremental_l_diversity(spark, s),
+    ),
+    "kcore": (
+        lambda d, s: SP.kcore_state_batch(d.edges, s, 0),
+        lambda spark, d, s: SP.incremental_k_core(spark, s, k=2),
+    ),
+    "pmi": (
+        lambda d, s: SP.pmi_state_batch(d.docs, s, 0),
+        lambda spark, d, s: SP.incremental_pmi(spark, s),
+    ),
+}
+
+
+@pytest.mark.parametrize("name", sorted(DASHBOARDS))
+def test_incremental_result_schema_same_before_and_after_first_batch(
+    spark, dashboard_inputs, tmp_path, name
+):
+    """A dashboard queried before its first batch has landed returns the
+    same column names AND dtypes as after a real batch — the empty result
+    is the finisher run over empty typed state, so a reader that unions or
+    compares snapshots never sees the schema change under it."""
+    land, assemble = DASHBOARDS[name]
+    state = str(tmp_path / "state")
+    before = assemble(spark, dashboard_inputs, state)
+    before.collect()  # the pre-first-batch result must also execute
+    land(dashboard_inputs, state)
+    assert before.dtypes == assemble(spark, dashboard_inputs, state).dtypes
 
 
 def test_incremental_gapfill_equals_batch(spark, tmp_path):
@@ -2419,8 +2663,9 @@ def test_attach_markov_stream_end_to_end(spark, tmp_path):
         markov_pair_counts,
     )
     from pinterest_data_pipeline218_spark.streaming.pipeline import (
-        attach_markov_stream,
+        attach_state_stream,
         incremental_markov,
+        markov_state_batch,
     )
 
     def t(minute):
@@ -2451,7 +2696,9 @@ def test_attach_markov_stream_end_to_end(spark, tmp_path):
         .withColumn("ts", F.to_timestamp("ts"))
     )
     state = str(tmp_path / "state")
-    q = attach_markov_stream(stream, state, str(tmp_path / "cp"))
+    q = attach_state_stream(
+        stream, str(tmp_path / "cp"), lambda df, bid: markov_state_batch(df, state, bid)
+    )
     q.processAllAvailable()
     q.stop()
 
@@ -2470,7 +2717,7 @@ def test_attach_markov_stream_end_to_end(spark, tmp_path):
 
 
 def test_attach_drift_stream_end_to_end(spark, tmp_path):
-    """attach_drift_stream drives drift_state_batch with Structured
+    """attach_state_stream drives drift_state_batch with Structured
     Streaming's real batch ids: file-triggered micro-batches accumulate
     drift cells, and the monitor read afterward equals the batch
     finisher over (baseline, union) — with the planted shift flagged."""
@@ -2483,7 +2730,8 @@ def test_attach_drift_stream_end_to_end(spark, tmp_path):
         drift_report,
     )
     from pinterest_data_pipeline218_spark.streaming.pipeline import (
-        attach_drift_stream,
+        attach_state_stream,
+        drift_state_batch,
         incremental_events_drift,
     )
 
@@ -2510,7 +2758,9 @@ def test_attach_drift_stream_end_to_end(spark, tmp_path):
         .option("maxFilesPerTrigger", "1").load(str(src))
     )
     state = str(tmp_path / "state")
-    q = attach_drift_stream(stream, state, str(tmp_path / "cp"))
+    q = attach_state_stream(
+        stream, str(tmp_path / "cp"), lambda df, bid: drift_state_batch(df, state, bid)
+    )
     q.processAllAvailable()
     q.stop()
 
@@ -3154,8 +3404,9 @@ def test_attach_journey_stream_end_to_end(spark, tmp_path):
         journey_strings,
     )
     from pinterest_data_pipeline218_spark.streaming.pipeline import (
-        attach_journey_stream,
+        attach_state_stream,
         incremental_journey,
+        journey_state_batch,
     )
 
     def t(minute):
@@ -3186,7 +3437,9 @@ def test_attach_journey_stream_end_to_end(spark, tmp_path):
         .withColumn("ts", F.to_timestamp("ts"))
     )
     state = str(tmp_path / "state")
-    q = attach_journey_stream(stream, state, str(tmp_path / "cp"))
+    q = attach_state_stream(
+        stream, str(tmp_path / "cp"), lambda df, bid: journey_state_batch(df, state, bid)
+    )
     q.processAllAvailable()
     q.stop()
 
@@ -3316,7 +3569,7 @@ def test_incremental_cascade_equals_batch(spark, tmp_path):
 
 
 def test_attach_cascade_stream_end_to_end(spark, tmp_path):
-    """attach_cascade_stream drives cascade_state_batch with Structured
+    """attach_state_stream drives cascade_state_batch with Structured
     Streaming's real batch ids: file-triggered document micro-batches
     accumulate funnel cells, and the read-side equals the batch kernel
     over the union."""
@@ -3326,7 +3579,8 @@ def test_attach_cascade_stream_end_to_end(spark, tmp_path):
 
     from pinterest_data_pipeline218_spark.operators.corpus import cascade_cells
     from pinterest_data_pipeline218_spark.streaming.pipeline import (
-        attach_cascade_stream,
+        attach_state_stream,
+        cascade_state_batch,
         incremental_filter_cascade,
     )
 
@@ -3351,7 +3605,9 @@ def test_attach_cascade_stream_end_to_end(spark, tmp_path):
         .option("maxFilesPerTrigger", "1").load(str(src))
     )
     state = str(tmp_path / "state")
-    q = attach_cascade_stream(stream, state, str(tmp_path / "cp"))
+    q = attach_state_stream(
+        stream, str(tmp_path / "cp"), lambda df, bid: cascade_state_batch(df, state, bid)
+    )
     q.processAllAvailable()
     q.stop()
 
@@ -3539,7 +3795,7 @@ def test_incremental_ivf_staleness_equals_batch(spark, tmp_path):
         write_ivf_index,
     )
     from pinterest_data_pipeline218_spark.streaming.pipeline import (
-        attach_ivf_assign_stream,
+        attach_state_stream,
         incremental_ivf_staleness,
         ivf_assign_state_batch,
     )
@@ -3591,8 +3847,9 @@ def test_incremental_ivf_staleness_equals_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", "1").load(str(src))
     )
     state_dir = str(tmp_path / "state")
-    q = attach_ivf_assign_stream(
-        stream, index_path, state_dir, str(tmp_path / "cp")
+    q = attach_state_stream(
+        stream, str(tmp_path / "cp"),
+        lambda df, bid: ivf_assign_state_batch(df, index_path, state_dir, bid),
     )
     q.processAllAvailable()
     q.stop()
@@ -3650,7 +3907,7 @@ def test_incremental_cusum_equals_batch(spark, tmp_path):
 
     from pinterest_data_pipeline218_spark.plans.events import cusum_daily
     from pinterest_data_pipeline218_spark.streaming.pipeline import (
-        attach_cusum_stream,
+        attach_state_stream,
         cusum_state_batch,
         incremental_cusum,
     )
@@ -3697,7 +3954,10 @@ def test_incremental_cusum_equals_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", "1").load(str(src))
     )
     state_dir = str(tmp_path / "state")
-    q = attach_cusum_stream(stream, state_dir, str(tmp_path / "cp"))
+    q = attach_state_stream(
+        stream, str(tmp_path / "cp"),
+        lambda df, bid: cusum_state_batch(df, state_dir, bid),
+    )
     q.processAllAvailable()
     q.stop()
 
@@ -4115,7 +4375,7 @@ def test_incremental_kcore_equals_batch(spark, tmp_path):
 
     from pinterest_data_pipeline218_spark.operators.graph import k_core
     from pinterest_data_pipeline218_spark.streaming.pipeline import (
-        attach_kcore_stream,
+        attach_state_stream,
         incremental_k_core,
         kcore_state_batch,
     )
@@ -4143,7 +4403,10 @@ def test_incremental_kcore_equals_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", "1").load(str(src))
     )
     state_dir = str(tmp_path / "state")
-    q = attach_kcore_stream(stream, state_dir, str(tmp_path / "cp"))
+    q = attach_state_stream(
+        stream, str(tmp_path / "cp"),
+        lambda df, bid: kcore_state_batch(df, state_dir, bid),
+    )
     q.processAllAvailable()
     q.stop()
 
@@ -4186,7 +4449,7 @@ def test_incremental_pmi_equals_batch(spark, tmp_path):
         pmi_collocations,
     )
     from pinterest_data_pipeline218_spark.streaming.pipeline import (
-        attach_pmi_stream,
+        attach_state_stream,
         incremental_pmi,
         pmi_state_batch,
     )
@@ -4211,7 +4474,10 @@ def test_incremental_pmi_equals_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", "1").load(str(src))
     )
     state_dir = str(tmp_path / "state")
-    q = attach_pmi_stream(stream, state_dir, str(tmp_path / "cp"))
+    q = attach_state_stream(
+        stream, str(tmp_path / "cp"),
+        lambda df, bid: pmi_state_batch(df, state_dir, bid),
+    )
     q.processAllAvailable()
     q.stop()
 
@@ -4284,3 +4550,42 @@ def test_ivf_assign_raises_over_cell_cap_and_memoizes(spark):
     assert len(S._CELL_CAP_CACHE) == 1
     S.ivf_assign_cells(new, cents)
     assert len(S._CELL_CAP_CACHE) == 1  # same plan object -> memo hit
+
+
+def test_pipeline_public_names_have_callers():
+    """Every public top-level function and constant of
+    streaming/pipeline.py is used as code (not merely named in a
+    docstring) from tests/, perfbench/, __spark_entry__.py or another
+    package module. A public wrapper nothing calls is code the system
+    does not need; make it private or delete it."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    package = root / "pinterest_data_pipeline218_spark"
+    module = package / "streaming" / "pipeline.py"
+    public = set()
+    for node in ast.parse(module.read_text()).body:
+        if isinstance(node, ast.FunctionDef):
+            public.add(node.name)
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            public.update(t.id for t in targets if isinstance(t, ast.Name))
+    public = {name for name in public if not name.startswith("_")}
+
+    callers = [
+        *root.glob("tests/**/*.py"),
+        *root.glob("perfbench/**/*.py"),
+        root / "__spark_entry__.py",
+        *(p for p in package.glob("**/*.py") if p != module),
+    ]
+    used = set()
+    for path in callers:
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Name):
+                used.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                used.add(node.attr)
+            elif isinstance(node, ast.alias):
+                used.add(node.name.rsplit(".", 1)[-1])
+    assert sorted(public - used) == []
