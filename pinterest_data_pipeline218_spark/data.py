@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import os
 import weakref
+from collections import OrderedDict
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -31,43 +32,78 @@ TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Memo of loaded LAZY table plans, per live SparkSession (r16, guide §5):
-# `spark.read.parquet` re-resolves the source per call — file listing +
-# footer/schema inference through py4j, measured ~110-135 ms per call on
-# this host — and the bench harness pays it per table per rep for all 207
-# queries (the single largest driver-tax line of the r16 builder sweep:
-# ~90 s of cumulative builder time, roughly half of it load_table).
-# Stores only the lazy DataFrame (no data, no results — every action still
-# computes from the parquet inputs); callers get a fresh select("*")
-# wrapper so physical planning stays per-action under the CURRENT session
-# conf (the _memo_plan discipline in operators/dedup.py). Keys carry the
-# file's mtime+size (the on-disk IVF index convention), so a rewritten
-# fixture misses the memo instead of serving a stale file listing; the
-# WeakKeyDictionary drops entries with their session, which also keeps a
-# sibling spark.newSession() from inheriting plans resolved under another
-# session's conf (ADVICE r15).
-_LOAD_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
+MEMO_MAX = 256  # entries per session, least-recently-used out
+
+_SESSION_MEMO: "weakref.WeakKeyDictionary[SparkSession, OrderedDict]" = (
     weakref.WeakKeyDictionary()
 )
-_LOAD_MEMO_MAX = 64  # distinct (sf_dir, table, stat) per session
+
+
+def session_memo(spark: SparkSession, key: tuple, build):
+    """The package's one memo for PLANNING state: loaded lazy scans,
+    builder plans, trained codebooks/centroids/merge tables, attestation
+    verdicts. Returns the value stored under ``key`` for this session,
+    calling ``build()`` once on a miss.
+
+    ``key[0]`` is the caller's tag (``"load"``, ``"lsh_verified"``,
+    ``"bpe"``, ...), so callers sharing the store cannot collide; the
+    rest is whatever determines the value — typically
+    ``plan_identity(df)`` of the input plan, or ``sf_dir`` plus
+    parameters. The store is per live SparkSession (a WeakKeyDictionary:
+    entries die with their session, and a sibling ``spark.newSession()``
+    never sees plans analyzed under another session's state), bounded at
+    MEMO_MAX entries with least-recently-used eviction.
+
+    Data-immutability assumption: keys see PLANS (paths, expressions),
+    not file contents. A memoized value stays valid while the files under
+    a plan are not rewritten in place within the session's lifetime —
+    the same contract as Spark's own table/statistics caches. Callers
+    that read a path directly (``load_table``, the on-disk IVF
+    quantizer) add its ``path_stamp``, so a path rewritten in place
+    misses.
+
+    A stored DataFrame caches its QueryExecution, so callers memoizing a
+    COMPOSITE plan hand back ``session_memo(...).select("*")`` — one
+    node the optimizer collapses — to keep physical planning per action
+    under the current session conf. A literal leaf relation (trained
+    values via createDataFrame) is returned as the stored object itself:
+    one session-stable RDD identity keeps every consumer's plan digest
+    and CacheManager key identical across executions.
+
+    Not synchronised: call it from the thread that builds queries."""
+    per = _SESSION_MEMO.get(spark)
+    if per is None:
+        per = _SESSION_MEMO[spark] = OrderedDict()
+    if key in per:
+        per.move_to_end(key)
+        return per[key]
+    got = build()
+    per[key] = got
+    if len(per) > MEMO_MAX:
+        per.popitem(last=False)
+    return got
+
+
+def path_stamp(path: str) -> tuple | None:
+    """(mtime_ns, size, inode) of a local file or directory, None when it
+    cannot be stat'ed: the memo-key part that makes a path rewritten in
+    place miss instead of serving state derived from the old contents."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    return (st.st_mtime_ns, st.st_size, st.st_ino)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    try:
-        st = os.stat(path)
-        stat_key = (st.st_mtime_ns, st.st_size)
-    except OSError:
-        stat_key = None
-    per = _LOAD_MEMO.setdefault(spark, {})
-    key = (sf_dir, name, stat_key)
-    got = per.get(key)
-    if got is None:
-        got = _load_table_build(spark, sf_dir, name)
-        if len(per) >= _LOAD_MEMO_MAX:
-            per.pop(next(iter(per)))
-        per[key] = got
-    return got.select("*")
+    # `spark.read.parquet` re-resolves the source per call (file listing +
+    # footer/schema inference through py4j, ~110-135 ms); the memo keeps
+    # the lazy scan
+    stamp = path_stamp(os.path.join(sf_dir, f"{name}.parquet"))
+    key = ("load", sf_dir, name, stamp)
+    return session_memo(
+        spark, key, lambda: _load_table_build(spark, sf_dir, name)
+    ).select("*")
 
 
 def _load_table_build(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -123,34 +159,6 @@ def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[st
     for name, df in dfs.items():
         df.createOrReplaceTempView(name)
     return dfs
-
-
-# Literal (collected-values) relations, memoized per live SparkSession
-# (r16): a trained-planning-state table (Lloyd codebook, k-means
-# centroids) embedded via spark.createDataFrame gets a FRESH RDD identity
-# on every call, so every downstream plan digest (plan_identity) and
-# CacheManager plan key changes per execution — ml_semantic_keepers'
-# edge registry missed on every rep and re-paid its pair materialization
-# (A/B 2.0 -> 3.4 s) until the relation object was made stable. Returning
-# the SAME DataFrame object is safe here because it is a leaf relation
-# over immutable collected values: there is no physical plan beneath it
-# that a session-conf flip could re-shape (contrast _memo_plan's fresh
-# select('*') discipline for composite plans).
-_LITERAL_DF_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
-_LITERAL_DF_MEMO_MAX = 64
-
-
-def literal_df(spark: SparkSession, key: tuple, rows: list, schema: str) -> DataFrame:
-    per = _LITERAL_DF_MEMO.setdefault(spark, {})
-    df = per.get(key)
-    if df is None:
-        df = spark.createDataFrame(rows, schema)
-        if len(per) >= _LITERAL_DF_MEMO_MAX:
-            per.pop(next(iter(per)))
-        per[key] = df
-    return df
 
 
 def shielded_sort(df: DataFrame, *cols: str) -> DataFrame:

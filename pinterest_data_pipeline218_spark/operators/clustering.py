@@ -32,7 +32,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from ..data import load_table, shielded_sort
+from ..data import load_table, plan_identity, session_memo, shielded_sort
 from ..functions.vectors import as_double_array
 
 K_CLUSTERS = 8
@@ -97,12 +97,10 @@ def _update(comps: DataFrame, assign: DataFrame) -> DataFrame:
 # from the parquet inputs via per-round jobs over ONE localCheckpointed
 # component stream, numerically identical integer arithmetic round by
 # round (the DuckDB oracle's chained CTEs are unchanged, gate stays
-# bitwise).
-# Data-immutability assumption (ADVICE r15, documented): plan_identity
-# sees the emb PLAN, not file contents — the standing convention that
-# sf_dir's parquet is immutable for the application's lifetime.
-_KM_CENT_MEMO: dict[tuple, list] = {}
-_KM_CENT_MEMO_MAX = 16
+# bitwise). The memo holds the literal relation itself: a fresh
+# createDataFrame per call would change every consumer's plan digest per
+# execution and defeat the CC edge registry / CacheManager reuse (measured
+# as a 2.0 -> 3.4 s regression on ml_semantic_keepers).
 _KM_CENT_SCHEMA = "cluster bigint, pos int, c bigint"
 
 
@@ -110,16 +108,9 @@ def _trained_centroids(
     emb: DataFrame, comps: DataFrame, rounds: int = KM_ROUNDS
 ) -> DataFrame:
     """Lloyd-refined centroids as a literal (cluster, pos, c) relation."""
-    from ..data import plan_identity
-
     spark = emb.sparkSession
-    key = (
-        spark.sparkContext.applicationId,
-        plan_identity(emb),
-        rounds,
-    )
-    got = _KM_CENT_MEMO.get(key)
-    if got is None:
+
+    def train() -> DataFrame:
         cps = comps.localCheckpoint()
         # Seed from the K lowest vec_ids BY RANK (TakeOrdered + broadcast),
         # not `vec_id < K` — on corpora whose ids aren't 0-based contiguous
@@ -137,15 +128,9 @@ def _trained_centroids(
             cent = spark.createDataFrame(got, _KM_CENT_SCHEMA)
             rows = _update(cps, _assign(cps, cent)).collect()
             got = [(r["cluster"], r["pos"], r["c"]) for r in rows]
-        if len(_KM_CENT_MEMO) >= _KM_CENT_MEMO_MAX:
-            _KM_CENT_MEMO.pop(next(iter(_KM_CENT_MEMO)))
-        _KM_CENT_MEMO[key] = got
-    # a per-session STABLE relation object: a fresh createDataFrame per
-    # call would change every consumer's plan digest per execution and
-    # defeat the CC edge registry / CacheManager reuse (see data.literal_df)
-    from ..data import literal_df
+        return spark.createDataFrame(got, _KM_CENT_SCHEMA)
 
-    return literal_df(spark, key, got, _KM_CENT_SCHEMA)
+    return session_memo(spark, ("km_centroids", plan_identity(emb), rounds), train)
 
 
 def ml_kmeans_refine(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -28,7 +28,7 @@ import operator
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from ..data import load_table, plan_identity, shielded_sort
+from ..data import load_table, plan_identity, session_memo, shielded_sort
 from ..functions import text as T
 from ..functions.vectors import (
     as_double_array,
@@ -186,54 +186,21 @@ def _verify_sides(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     return x, y
 
 
-# Session-scoped memo of the two heavy pair-stream BUILDERS' lazy plans
-# (r15). Constructing the LSH pipeline's DataFrame graph costs ~0.7 s of
-# pure driver/py4j time per call (hundreds of Column expressions), paid by
-# EVERY consumer execution — cluster_cc/cc_star/minhash_lsh each rebuild
-# an identical plan per bench rep. The memo stores the LAZY DataFrame
-# keyed per live SparkSession (WeakKeyDictionary since r16, ADVICE r15:
-# a sibling spark.newSession() shares the applicationId but must not be
-# served plans whose analysis ran under another session's state) plus
-# (builder, sf_dir, params): no data, no results — every action still
-# computes from the parquet inputs; DataFrames are immutable so sharing
-# the object across consumers is safe, and the plan-keyed
-# persist/attestation caches see the identical plan they already key on.
-# Bounded like the edge registry. Data-immutability assumption (ADVICE
-# r15, documented): the key does not see file CONTENTS — the standing
-# convention that sf_dir's parquet is immutable for the application's
-# lifetime (the driver starts a fresh JVM per run).
-import weakref
-
-_BUILDER_PLAN_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
-_BUILDER_PLAN_MEMO_MAX = 32  # per session
-
-
-def _memo_plan(spark: SparkSession, key: tuple, build) -> DataFrame:
-    per = _BUILDER_PLAN_MEMO.setdefault(spark, {})
-    got = per.get(key)
-    if got is None:
-        got = build()
-        if len(per) >= _BUILDER_PLAN_MEMO_MAX:
-            per.pop(next(iter(per)))
-        per[key] = got
-    # hand back a FRESH Dataset over the memoized logical plan: a Dataset
-    # caches its QueryExecution, so returning the stored object verbatim
-    # would freeze the PHYSICAL plan under whatever session conf was active
-    # at first build (test_minhash_lsh_has_no_forced_corpus_broadcast flips
-    # autoBroadcastJoinThreshold and re-plans). select("*") is one cheap
-    # node the optimizer collapses; planning stays per-action, as before.
-    return got.select("*")
+# The two heavy pair-stream builders memoize their LAZY plans per
+# session (data.session_memo): constructing the LSH pipeline's DataFrame
+# graph costs ~0.7 s of pure driver/py4j time per call, and
+# cluster_cc/cc_star/minhash_lsh would each rebuild an identical plan per
+# execution. Every action still computes from the parquet inputs, and the
+# plan-keyed persist/attestation caches see the identical plan they key on.
 
 
 def _lsh_verified_pairs(
     spark: SparkSession, sf_dir: str, threshold: float
 ) -> DataFrame:
     key = ("lsh_verified", sf_dir, threshold)
-    return _memo_plan(
+    return session_memo(
         spark, key, lambda: _lsh_verified_pairs_build(spark, sf_dir, threshold)
-    )
+    ).select("*")
 
 
 def _lsh_verified_pairs_build(
@@ -721,9 +688,37 @@ CC_MAX_ROUNDS = 20
 # working set; each entry is kilobytes-to-megabytes of verified pairs.
 # value: (persisted edge DataFrame, n_edges). The row count rides along
 # (r15): it is plan-determined, and re-counting a cache-hit materialization
-# cost a full job per consumer execution (~0.35 s/rep at sf0.1).
+# cost a full job per consumer execution (~0.35 s/rep at sf0.1). Kept
+# apart from data.session_memo because it owns persisted storage: the
+# CacheManager is shared by every session of the application, so entries
+# are keyed per applicationId and must be unpersisted on eviction.
 _EDGE_PLAN_CACHE: dict[tuple, tuple[DataFrame, int]] = {}
 _EDGE_PLAN_CACHE_MAX = 16
+
+
+def _registered_edges(
+    spark: SparkSession, key: tuple, build
+) -> tuple[DataFrame, int]:
+    """(persisted edges, n_edges) registered under ``key`` for this
+    application; ``build()`` supplies the unpersisted edge DataFrame on a
+    miss, which is persisted and counted once."""
+    key = (spark.sparkContext.applicationId, *key)
+    cached = _EDGE_PLAN_CACHE.get(key)
+    if cached is not None:
+        edges = cached[0]
+        sl = edges.storageLevel
+        if not (sl.useMemory or sl.useDisk):
+            # a session-wide clearCache (bench.py between queries) dropped
+            # the materialization but not the registry entry — re-pin, or
+            # every later build in the session would run permanently cold
+            edges.persist()
+        return cached
+    edges = build().persist()
+    n_edges = edges.count()
+    if len(_EDGE_PLAN_CACHE) >= _EDGE_PLAN_CACHE_MAX:
+        _EDGE_PLAN_CACHE.pop(next(iter(_EDGE_PLAN_CACHE)))[0].unpersist()
+    _EDGE_PLAN_CACHE[key] = (edges, n_edges)
+    return edges, n_edges
 
 
 def connected_components(nodes: DataFrame, pairs: DataFrame) -> DataFrame:
@@ -736,7 +731,7 @@ def connected_components(nodes: DataFrame, pairs: DataFrame) -> DataFrame:
     """
     a, b = pairs.columns
     sym = pairs.select(F.col(a).alias("src"), F.col(b).alias("dst"))
-    edges = sym.union(
+    both = sym.union(
         sym.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
     # Materialize once: every round re-reads the edge list, and without this
@@ -752,27 +747,10 @@ def connected_components(nodes: DataFrame, pairs: DataFrame) -> DataFrame:
     # the r14 CacheManager-reuse win (sibling consumers of the same pair
     # stream share one materialization) is untouched for the registry's
     # working set.
-    from ..data import plan_identity
-
-    app_id = nodes.sparkSession.sparkContext.applicationId
-    edge_key = (app_id, plan_identity(edges))
-    cached = _EDGE_PLAN_CACHE.get(edge_key)
-    if cached is not None:
-        edges, n_edges = cached
-        sl = edges.storageLevel
-        if not (sl.useMemory or sl.useDisk):
-            # a session-wide clearCache (bench.py between queries) dropped
-            # the materialization but not the registry entry — re-pin, or
-            # every later build in the session would run permanently cold
-            edges.persist()
-        # n_edges is plan-determined: reusing the recorded count skips one
-        # full job per cache-hit execution (r15)
-    else:
-        edges = edges.persist()
-        n_edges = edges.count()
-        if len(_EDGE_PLAN_CACHE) >= _EDGE_PLAN_CACHE_MAX:
-            _EDGE_PLAN_CACHE.pop(next(iter(_EDGE_PLAN_CACHE)))[0].unpersist()
-        _EDGE_PLAN_CACHE[edge_key] = (edges, n_edges)
+    spark = nodes.sparkSession
+    edges, n_edges = _registered_edges(
+        spark, (plan_identity(both),), lambda: both
+    )
     labels = nodes.select("node", F.col("node").alias("label")).localCheckpoint()
 
     def checksum(df: DataFrame):
@@ -780,7 +758,6 @@ def connected_components(nodes: DataFrame, pairs: DataFrame) -> DataFrame:
         # even at 10^10 nodes with 2^40-sized ids
         return df.agg(F.sum(F.col("label").cast("decimal(38,0)")).alias("s")).first()["s"]
 
-    spark = nodes.sparkSession
     # Scope the loop's shuffle width to its state size: each round's
     # label-propagation join carries O(|V|+|E|) rows, and the per-round
     # localCheckpoint materializes on the RDD path where AQE can't coalesce
@@ -835,8 +812,8 @@ def connected_components(nodes: DataFrame, pairs: DataFrame) -> DataFrame:
         # policy and same measured-revert history as the graph family's
         # edge caches (pagerank/k_core/label_propagation, f1228d5);
         # caches are capped-linear in corpus size, kilobytes here.
-        # Session-lifetime growth is bounded by _EDGE_PLAN_CACHE's
-        # oldest-out eviction above (ADVICE r14).
+        # Session-lifetime growth is bounded by _registered_edges'
+        # oldest-out eviction (ADVICE r14).
     if not converged:
         # Round cap hit without converging: the graph has a long-diameter
         # component (min-label needs O(diameter) rounds). Hand off to the
@@ -928,20 +905,10 @@ def connected_components_star(
     spark = nodes.sparkSession
     shuffle_key = "spark.sql.shuffle.partitions"
     old_parts = spark.conf.get(shuffle_key)
-    cached = _EDGE_PLAN_CACHE.get(edge_key) if edge_key is not None else None
-    if cached is not None:
-        edges, n_edges = cached
-        sl = edges.storageLevel
-        if not (sl.useMemory or sl.useDisk):
-            # a session-wide clearCache dropped the materialization but not
-            # the registry entry — re-pin (connected_components' policy)
-            edges.persist()
-    elif edge_key is not None:
-        edges = _canon_edges(pairs).persist()
-        n_edges = edges.count()
-        if len(_EDGE_PLAN_CACHE) >= _EDGE_PLAN_CACHE_MAX:
-            _EDGE_PLAN_CACHE.pop(next(iter(_EDGE_PLAN_CACHE)))[0].unpersist()
-        _EDGE_PLAN_CACHE[edge_key] = (edges, n_edges)
+    if edge_key is not None:
+        edges, n_edges = _registered_edges(
+            spark, edge_key, lambda: _canon_edges(pairs)
+        )
     else:
         edges = _canon_edges(pairs).localCheckpoint()
         n_edges = edges.count()
@@ -1018,12 +985,7 @@ def dedup_cluster_cc_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-paying the full LSH-verify materialization per execution was the
     round-15 bench's biggest row (7.7 s driver), and the r15-rejected
     plan_identity key was the whole cost of that A/B loss."""
-    edge_key = (
-        spark.sparkContext.applicationId,
-        "star_edges",
-        sf_dir,
-        CC_JACCARD_THRESHOLD,
-    )
+    edge_key = ("star_edges", sf_dir, CC_JACCARD_THRESHOLD)
     return _cluster_cc(
         spark,
         sf_dir,
@@ -1166,9 +1128,9 @@ def capped_verified_pairs(
     cap: int = CC_COMPOSED_EDGE_CAP,
 ) -> DataFrame:
     key = ("capped_verified", sf_dir, threshold, cap)
-    return _memo_plan(
+    return session_memo(
         spark, key, lambda: _capped_verified_pairs_build(spark, sf_dir, threshold, cap)
-    )
+    ).select("*")
 
 
 def _capped_verified_pairs_build(
@@ -1840,31 +1802,15 @@ def _cont_hashed(shs_df: DataFrame) -> DataFrame:
     ).drop("shs")
 
 
-# Attestation results keyed by (Spark application id, logical plan): the
-# same corpus plan within one application always reads the same immutable
-# files, so the proof is reusable — exactly how an engine caches ANALYZE
-# statistics per table version. Without this, every re-execution of a
-# containment query would re-pay the linear attestation scan (~6 s at
-# sf0.1, measured r13), negating the hash-path win it enables. The
-# applicationId key (not id(session) — review r13: a recycled object id
-# could revive a dead session's proof) is unique per SparkContext; the
-# plan key is the MD5 of the full ANALYZED PLAN STRING, not
-# DataFrame.semanticHash() — semanticHash is a 32-bit digest, so two
-# different corpus plans in one application could collide and silently
-# reuse the wrong verdict, skipping the string-set verify on an
-# unattested corpus (ADVICE r13 medium). MD5-of-plan is
-# collision-resistant for this purpose and still O(plan) to compute.
-# In-place regeneration of the underlying files WITHIN one application is
-# outside the contract, same as Spark's own table/statistics caches. A
-# size cap bounds pathological many-plan sessions.
-_INJECTIVE_CACHE: dict[tuple[str, str], bool] = {}
-_INJECTIVE_CACHE_MAX = 64
-
-
-# the collision-resistant plan digest the memo keys on (shared with the
-# IVF cell-cap attestation — see data.plan_identity for the exprId
-# canonicalization rationale)
-_plan_identity = plan_identity
+# Attestation results memoized per (session, logical plan): the same
+# corpus plan always reads the same files, so the proof is reusable —
+# exactly how an engine caches ANALYZE statistics per table version.
+# Without this, every re-execution of a containment query would re-pay the
+# linear attestation scan (~6 s at sf0.1, measured r13), negating the
+# hash-path win it enables. The plan key is data.plan_identity (MD5 of the
+# full analyzed plan), not DataFrame.semanticHash() — a 32-bit digest could
+# collide two corpus plans and silently reuse the wrong verdict, skipping
+# the string-set verify on an unattested corpus (ADVICE r13 medium).
 
 
 def _cont_hash_injective(base: DataFrame) -> bool:
@@ -1880,10 +1826,7 @@ def _cont_hash_injective(base: DataFrame) -> bool:
     One linear aggregation over the shingle volume, memoized per
     (session, corpus plan); the limit(1).collect() is bounded planning
     state (0 or 1 rows)."""
-    app_id = base.sparkSession.sparkContext.applicationId
-    key = (app_id, _plan_identity(base))
-    hit = _INJECTIVE_CACHE.get(key)
-    if hit is None:
+    def attest() -> bool:
         dup = (
             base.select(F.explode("shs").alias("g"))
             .select(T.token_hash(F.col("g")).alias("h"), "g")
@@ -1891,11 +1834,10 @@ def _cont_hash_injective(base: DataFrame) -> bool:
             .agg(F.count_distinct("g").alias("n_strings"))
             .filter(F.col("n_strings") > 1)
         )
-        hit = not dup.limit(1).collect()
-        if len(_INJECTIVE_CACHE) >= _INJECTIVE_CACHE_MAX:
-            _INJECTIVE_CACHE.clear()
-        _INJECTIVE_CACHE[key] = hit
-    return hit
+        return not dup.limit(1).collect()
+
+    key = ("injective", plan_identity(base))
+    return session_memo(base.sparkSession, key, attest)
 
 
 def _cont_score_exact(sized: DataFrame, order_keys: list[str]) -> DataFrame:

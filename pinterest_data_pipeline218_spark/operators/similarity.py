@@ -27,7 +27,7 @@ import tempfile
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ..data import load_table
+from ..data import load_table, path_stamp, plan_identity, session_memo
 from ..functions.vectors import as_double_array, cosine, cosine_sql_duckdb, dot
 
 TOP_K = 10
@@ -847,26 +847,24 @@ def write_ivf_index(emb: DataFrame, path: str) -> None:
     data = emb.withColumn("cell", F.col("label"))
     data.write.mode("overwrite").partitionBy("cell").parquet(f"{path}/data")
     build_ivf_centroids(emb).write.mode("overwrite").parquet(f"{path}/centroids")
-    # an in-place rebuild at the same path must invalidate the RAM-resident
-    # quantizer, or a re-probe in this process ranks against stale centroids
-    _CENTROID_CACHE.pop(path, None)
-
-
-_CENTROID_CACHE: dict[str, list[tuple[int, list[float]]]] = {}
 
 
 def _load_centroids(spark: SparkSession, index_path: str) -> list[tuple[int, list[float]]]:
     """The coarse quantizer, resident driver-side — exactly how IVF systems
     hold it (|cells| x dim floats, kilobytes at any corpus size). Collected
-    once per index path and cached, so a steady-state probe runs ONE Spark
-    job (the pruned cell scan) instead of paying a centroid-ranking job per
-    query. Cache keys are index paths; the gated query's paths already embed
-    the source file's mtime+size (_ivf_cache_dir), so data regeneration
-    rotates the key instead of serving stale centroids."""
-    if index_path not in _CENTROID_CACHE:
-        rows = spark.read.parquet(f"{index_path}/centroids").collect()
-        _CENTROID_CACHE[index_path] = [(r.label, list(r.c)) for r in rows]
-    return _CENTROID_CACHE[index_path]
+    once per index and memoized per session, so a steady-state probe runs
+    ONE Spark job (the pruned cell scan) instead of paying a
+    centroid-ranking job per query. The key carries the centroid
+    directory's path_stamp: an in-place rebuild (write_ivf_index,
+    write_pq_index) rewrites the directory and rotates the key, so a
+    re-probe never ranks against stale centroids, while an upsert (which
+    only appends to ``data``) keeps the frozen quantizer."""
+    cdir = f"{index_path}/centroids"
+
+    def collect() -> list[tuple[int, list[float]]]:
+        return [(r.label, list(r.c)) for r in spark.read.parquet(cdir).collect()]
+
+    return session_memo(spark, ("ivf_centroids", cdir, path_stamp(cdir)), collect)
 
 
 def _rank_cells(
@@ -1373,7 +1371,6 @@ def write_pq_index(emb: DataFrame, path: str, pq_k: int = PQ_K) -> None:
         f"{path}/codebook"
     )
     build_ivf_centroids(emb).write.mode("overwrite").parquet(f"{path}/centroids")
-    _CENTROID_CACHE.pop(path, None)  # see write_ivf_index
 
 
 def pq_index_topk(
@@ -1617,20 +1614,12 @@ def _pq_res_codes_cb(
 # 8-vs-32-core scaling ratio 1.02): every round's codebook subtree embeds
 # every earlier round's encode. The codebook is PQ_M·PQ_SUBDIM·pq_k rows of
 # small integers — kilobytes of index-build planning state, the same
-# category as the BPE merge table (text_analysis._BPE_MERGES_MEMO) and the
-# on-disk IVF centroids: memoized per (applicationId, emb plan identity,
-# rounds, pq_k), first build per session computes from the parquet inputs
-# via per-round jobs over ONE localCheckpointed residual stream (the
-# graph-loop idiom, guide §5/§2.4).
-#
-# Data-immutability assumption (ADVICE r15, documented): plan_identity
-# digests the emb PLAN (paths, expressions), not file contents — the memo
-# assumes the sf_dir's parquet is immutable for the application's lifetime,
-# the standing convention of every attestation memo in this repo (the
-# driver starts a fresh JVM per bench/oracle run, so nothing survives a
-# data regeneration).
-_RES_CB_MEMO: dict[tuple, list] = {}
-_RES_CB_MEMO_MAX = 16
+# category as the BPE merge table (text_analysis.train_bpe_merges) and the
+# on-disk IVF centroids: the literal codebook relation is memoized per
+# session (data.session_memo) on (emb plan identity, rounds, pq_k), and the
+# first build per session computes from the parquet inputs via per-round
+# jobs over ONE localCheckpointed residual stream (the graph-loop idiom,
+# guide §5/§2.4).
 _RES_CB_SCHEMA = "m int, r int, j int, qc bigint"
 
 
@@ -1649,16 +1638,8 @@ def _trained_res_cb(
     from pyspark.sql import Window
 
     spark = emb.sparkSession
-    from ..data import plan_identity
 
-    key = (
-        spark.sparkContext.applicationId,
-        plan_identity(emb),
-        lloyd_rounds,
-        pq_k,
-    )
-    got = _RES_CB_MEMO.get(key)
-    if got is None:
+    def train() -> DataFrame:
         # ONE materialization feeds the seed collect and every round's
         # encode+update — without it each training job would re-run the
         # scan + posexplode + cell-means join + vec_id shuffle.
@@ -1689,14 +1670,10 @@ def _trained_res_cb(
                 .collect()
             )
             got = [(r["m"], r["r"], r["j"], r["qc"]) for r in rows]
-        if len(_RES_CB_MEMO) >= _RES_CB_MEMO_MAX:
-            _RES_CB_MEMO.pop(next(iter(_RES_CB_MEMO)))
-        _RES_CB_MEMO[key] = got
-    # per-session STABLE relation object (see data.literal_df): keeps every
-    # consumer's plan digest identical across executions
-    from ..data import literal_df
+        return spark.createDataFrame(got, _RES_CB_SCHEMA)
 
-    return literal_df(spark, key, got, _RES_CB_SCHEMA)
+    key = ("res_cb", plan_identity(emb), lloyd_rounds, pq_k)
+    return session_memo(spark, key, train)
 
 
 def _ivfpq_residual(
@@ -2112,32 +2089,22 @@ IVF_INCR_MOD = 5  # vec_id % 5 == 0 plays the "arriving" 20% in the gate
 # both engines would agree on (so the oracle gate could not catch it).
 IVF_CELL_CAP = 1024
 
-# Verdicts keyed by (application id, canonicalized plan digest) — one
-# bounded planning count per distinct quantizer plan per application,
-# the injectivity-attestation memo discipline (operators/dedup.py).
-_CELL_CAP_CACHE: dict[tuple[str, str], int] = {}
-_CELL_CAP_CACHE_MAX = 64
-
 
 def _assert_cell_cap(cents: DataFrame) -> None:
     """Planning-time attestation that the quantizer fits IVF_CELL_CAP.
     The count is bounded by limit(cap+1) — never data-sized — and
     memoized per (session, quantizer plan) so repeated executions of the
     same assignment query pay it once."""
-    from ..data import plan_identity
-
-    app_id = cents.sparkSession.sparkContext.applicationId
-    key = (app_id, plan_identity(cents))
-    n = _CELL_CAP_CACHE.get(key)
-    if n is None:
-        # distinct before the limit (ADVICE r14): the cap bounds CELLS,
-        # not rows — a quantizer emitting duplicate label rows (e.g. an
-        # upstream join fan-out) must not trip the assertion while its
-        # distinct cells still fit
-        n = cents.select("label").distinct().limit(IVF_CELL_CAP + 1).count()
-        if len(_CELL_CAP_CACHE) >= _CELL_CAP_CACHE_MAX:
-            _CELL_CAP_CACHE.clear()
-        _CELL_CAP_CACHE[key] = n
+    # distinct before the limit (ADVICE r14): the cap bounds CELLS, not
+    # rows — a quantizer emitting duplicate label rows (e.g. an upstream
+    # join fan-out) must not trip the assertion while its distinct cells
+    # still fit
+    key = ("cell_cap", plan_identity(cents))
+    n = session_memo(
+        cents.sparkSession,
+        key,
+        lambda: cents.select("label").distinct().limit(IVF_CELL_CAP + 1).count(),
+    )
     if n > IVF_CELL_CAP:
         raise ValueError(
             f"IVF quantizer exceeds IVF_CELL_CAP={IVF_CELL_CAP} cells: "

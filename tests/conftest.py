@@ -47,3 +47,20 @@ def canon(v):
 def rows_set(df):
     """Order-insensitive canonical row set for comparisons (None-safe)."""
     return sorted(tuple(canon(v) for v in row) for row in df.collect())
+
+
+def memo_entries(spark, tag):
+    """{key: value} of the session memo entries stored under ``tag``."""
+    from pinterest_data_pipeline218_spark.data import _SESSION_MEMO
+
+    per = _SESSION_MEMO.get(spark, {})
+    return {k: v for k, v in per.items() if k[0] == tag}
+
+
+def forget_memo(spark, tag):
+    """Drop the session memo entries stored under ``tag``."""
+    from pinterest_data_pipeline218_spark.data import _SESSION_MEMO
+
+    per = _SESSION_MEMO.get(spark, {})
+    for k in [k for k in per if k[0] == tag]:
+        del per[k]

@@ -4,6 +4,7 @@ kernels vs plain-Python reference."""
 
 import pyspark.sql.functions as F
 import pytest
+from conftest import forget_memo, memo_entries
 
 SF = "/root/testdata/sf0.001"
 
@@ -753,6 +754,65 @@ def test_connected_components_path_graph_needs_multiple_rounds(spark):
         10: 10, 11: 10, 12: 10, 13: 10, 14: 10, 15: 10,
         99: 99, 200: 200, 300: 200,
     }
+
+
+def test_cc_edge_registry_reuses_repins_and_evicts(spark):
+    """The CC edge registry (dedup._registered_edges): a second call on
+    the same edges reuses the persisted DataFrame and its recorded
+    n_edges without rebuilding or recounting; after a session-wide
+    clearCache (bench.py and tools/selfcheck.py run one between queries)
+    the next call re-pins the same DataFrame; inserting past the bound
+    unpersists the oldest entry."""
+    from pinterest_data_pipeline218_spark.operators import dedup as D
+
+    def pinned(df):
+        sl = df.storageLevel
+        return sl.useMemory or sl.useDisk
+
+    # through connected_components: the second call adds no entry
+    nodes = spark.createDataFrame([(n,) for n in range(5)], ["node"])
+    pairs = spark.createDataFrame([(0, 1), (1, 2), (3, 4)], ["a", "b"])
+    before = set(D._EDGE_PLAN_CACHE)
+    first = {r.node: r.label for r in D.connected_components(nodes, pairs).collect()}
+    added = set(D._EDGE_PLAN_CACHE) - before
+    assert len(added) == 1
+    (cc_key,) = added
+    edges, n_edges = D._EDGE_PLAN_CACHE[cc_key]
+    assert n_edges == 6 and pinned(edges)  # both directions of 3 pairs
+    again = {r.node: r.label for r in D.connected_components(nodes, pairs).collect()}
+    assert again == first == {0: 0, 1: 0, 2: 0, 3: 3, 4: 3}
+    assert set(D._EDGE_PLAN_CACHE) - before == {cc_key}
+    assert D._EDGE_PLAN_CACHE[cc_key][0] is edges
+
+    builds = []
+
+    def build(n):
+        def run():
+            builds.append(n)
+            return spark.range(n).select(
+                F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
+            )
+
+        return run
+
+    oldest = D._registered_edges(spark, ("test_edges", 0), build(7))
+    assert oldest[1] == 7 and pinned(oldest[0]) and builds == [7]
+    hit = D._registered_edges(spark, ("test_edges", 0), build(7))
+    assert hit[0] is oldest[0] and hit[1] == 7 and builds == [7]
+
+    spark.catalog.clearCache()
+    assert not pinned(oldest[0])
+    hit = D._registered_edges(spark, ("test_edges", 0), build(7))
+    assert hit[0] is oldest[0] and hit[1] == 7 and builds == [7]
+    assert pinned(oldest[0])  # re-pinned, not rebuilt
+
+    for i in range(1, D._EDGE_PLAN_CACHE_MAX + 1):
+        D._registered_edges(spark, ("test_edges", i), build(1))
+    keys = [k[1:] for k in D._EDGE_PLAN_CACHE]
+    assert len(keys) == D._EDGE_PLAN_CACHE_MAX
+    assert ("test_edges", 0) not in keys
+    assert not pinned(oldest[0])  # evicted entries are unpersisted
+    assert ("test_edges", D._EDGE_PLAN_CACHE_MAX) in keys
 
 
 def test_cc_star_on_long_path_graph(spark):
@@ -1702,20 +1762,21 @@ def test_containment_hash_and_string_branches_agree(spark, monkeypatch):
     (the attestation IS the proof they coincide — this pins the fallback
     wiring, which no real corpus exercises). Also pins that the
     attestation actually memoizes per (session, plan)."""
-    from pinterest_data_pipeline218_spark.data import load_table
+    from pinterest_data_pipeline218_spark.data import load_table, plan_identity
     from pinterest_data_pipeline218_spark.operators import dedup as D
 
     docs = load_table(spark, "/root/testdata/sf0.001", "documents")
     base = D._cont_shingle_strings(docs, "doc_id")
-    D._INJECTIVE_CACHE.clear()
+    forget_memo(spark, "injective")
     assert D._cont_hash_injective(base)  # computes and caches
-    key = (spark.sparkContext.applicationId, D._plan_identity(base))
-    assert D._INJECTIVE_CACHE[key] is True  # memoized under the plan key
+    key = ("injective", plan_identity(base))
+    # memoized under the plan key
+    assert memo_entries(spark, "injective")[key] is True
     # the identity is collision-resistant (md5 of the analyzed plan, not
     # the 32-bit semanticHash — ADVICE r13 medium) and plan-sensitive:
     other = D._cont_shingle_strings(docs.limit(3), "doc_id")
-    assert D._plan_identity(other) != D._plan_identity(base)
-    assert D._plan_identity(base) == D._plan_identity(
+    assert plan_identity(other) != plan_identity(base)
+    assert plan_identity(base) == plan_identity(
         D._cont_shingle_strings(docs, "doc_id")
     )
     # r15 regression: an in-memory relation's STRING rendering shows only
@@ -1728,7 +1789,7 @@ def test_containment_hash_and_string_branches_agree(spark, monkeypatch):
     # is asserted on the parquet-rooted `base` above.)
     lr_a = spark.createDataFrame([(0, 1), (1, 2)], "a long, b long")
     lr_b = spark.createDataFrame([(5, 6), (6, 7)], "a long, b long")
-    assert D._plan_identity(lr_a) != D._plan_identity(lr_b)
+    assert plan_identity(lr_a) != plan_identity(lr_b)
 
     def rows_of(df):
         return {
@@ -2542,8 +2603,8 @@ def test_ivf_index_upsert_is_fresh_and_preserves_base(spark, tmp_path):
     from pinterest_data_pipeline218_spark.data import load_table
     from pinterest_data_pipeline218_spark.functions.vectors import as_double_array
     from pinterest_data_pipeline218_spark.operators.similarity import (
-        _CENTROID_CACHE,
         NPROBE,
+        _load_centroids,
         ivf_index_topk,
         ivf_index_upsert,
         write_ivf_index,
@@ -2563,11 +2624,13 @@ def test_ivf_index_upsert_is_fresh_and_preserves_base(spark, tmp_path):
         ).collect()
     }
 
+    cents = _load_centroids(spark, path)  # the memoized quantizer
     new = spark.createDataFrame(
         [(9999, 99, qvec)], "vec_id long, label int, v array<double>"
     )
     ivf_index_upsert(spark, path, new)
-    assert path in _CENTROID_CACHE  # frozen quantizer: cache NOT rotated
+    # frozen quantizer: memo key NOT rotated, same centroid list object
+    assert _load_centroids(spark, path) is cents
 
     after = ivf_index_topk(
         spark, path, query_vec=qvec, exclude_vec_id=0, nprobe=NPROBE
@@ -2578,6 +2641,32 @@ def test_ivf_index_upsert_is_fresh_and_preserves_base(spark, tmp_path):
         if vid in after_map:  # all but the one crowded out by the top-1
             assert after_map[vid] == cs
     assert len(set(before) - set(after_map)) <= 1
+
+
+def test_ivf_index_rebuild_in_place_reloads_quantizer(spark, tmp_path):
+    """The driver-resident quantizer is memoized per index, keyed on the
+    centroid directory's path_stamp: rebuilding the index in place at
+    the same path must serve the NEW centroids, never the memoized old
+    ones."""
+    from pinterest_data_pipeline218_spark.data import load_table
+    from pinterest_data_pipeline218_spark.functions.vectors import as_double_array
+    from pinterest_data_pipeline218_spark.operators.similarity import (
+        _load_centroids,
+        write_ivf_index,
+    )
+
+    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings").select(
+        "vec_id", "label", as_double_array("embedding").alias("v")
+    )
+    path = str(tmp_path / "ivf")
+    write_ivf_index(emb, path)
+    full = _load_centroids(spark, path)
+    assert _load_centroids(spark, path) is full  # memo hit
+    kept = sorted(label for label, _ in full)[:2]
+    write_ivf_index(emb.filter(F.col("label").isin(kept)), path)
+    rebuilt = _load_centroids(spark, path)
+    assert sorted(label for label, _ in rebuilt) == kept
+    assert len(full) > len(kept)
 
 
 def test_residual_ivfpq_beats_global_on_clustered(spark, tmp_path):
@@ -3977,14 +4066,16 @@ def test_ngram_jaccard_ppjoin_matches_exhaustive_model(spark, tmp_path, monkeypa
                 j = round(len(sa & sb) / len(sa | sb), 6)
                 expected[(min(ida, idb), max(ida, idb))] = j
     assert expected, "fixture must plant pairs above the threshold"
-    D._INJECTIVE_CACHE.clear()
+    forget_memo(spark, "injective")
     got = {
         (r.doc_a, r.doc_b): r.jaccard
         for r in dedup_ngram_jaccard(spark, str(tmp_path)).collect()
     }
     # the planted corpus is collision-free, so the default run above
     # took the attested hash path; now force the string fallback
-    assert any(D._INJECTIVE_CACHE.values()), "hash path was not attested"
+    assert any(memo_entries(spark, "injective").values()), (
+        "hash path was not attested"
+    )
     monkeypatch.setattr(D, "_cont_hash_injective", lambda _base: False)
     got_str = {
         (r.doc_a, r.doc_b): r.jaccard

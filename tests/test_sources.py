@@ -194,6 +194,83 @@ def test_ntz_load_is_session_tz_neutral(spark):
     assert tokyo == utc and len(utc) == 50
 
 
+def test_session_memo_hits_per_session_and_evicts_least_recently_used(spark):
+    """data.session_memo, the one planning-state memo: a hit returns the
+    stored object without calling build again; a sibling
+    spark.newSession() has its own store and misses; past MEMO_MAX the
+    least-recently-used key goes, and a key hit in between survives."""
+    from pinterest_data_pipeline218_spark.data import MEMO_MAX, session_memo
+
+    calls = []
+
+    def build(v):
+        def run():
+            calls.append(v)
+            return [v]
+
+        return run
+
+    got = session_memo(spark, ("test_memo", "a"), build("a"))
+    assert session_memo(spark, ("test_memo", "a"), build("a")) is got
+    assert calls == ["a"]
+
+    sibling = spark.newSession()
+    other = session_memo(sibling, ("test_memo", "a"), build("a"))
+    assert other is not got and calls == ["a", "a"]
+
+    # fill the sibling's store (the shared session's memo stays as is)
+    for i in range(MEMO_MAX - 1):
+        session_memo(sibling, ("test_memo", i), build(i))
+    # full: ("test_memo", "a") is least recently used; touch it so
+    # ("test_memo", 0) becomes the oldest
+    session_memo(sibling, ("test_memo", "a"), build("never"))
+    calls.clear()
+    session_memo(sibling, ("test_memo", "new"), build("new"))
+    assert calls == ["new"]
+    assert session_memo(sibling, ("test_memo", "a"), build("a2")) is other
+    assert calls == ["new"]  # the hit in between survived
+    session_memo(sibling, ("test_memo", 0), build("zero"))
+    assert calls == ["new", "zero"]  # the least recently used went
+
+
+def test_no_module_level_memo_outside_session_memo():
+    """Planning-state memos go through data.session_memo. Outside data.py
+    no package module may define a module-level empty dict or
+    WeakKeyDictionary() (the shape every hand-rolled memo took); the one
+    exception is dedup._EDGE_PLAN_CACHE, which owns persisted storage and
+    unpersists on eviction."""
+    import ast
+    import pathlib
+
+    import pinterest_data_pipeline218_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    allowed = {("operators/dedup.py", "_EDGE_PLAN_CACHE")}
+    found = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        if rel == "data.py":
+            continue
+        for node in ast.parse(path.read_text()).body:
+            if isinstance(node, ast.Assign):
+                targets, value = node.targets, node.value
+            elif isinstance(node, ast.AnnAssign) and node.value is not None:
+                targets, value = [node.target], node.value
+            else:
+                continue
+            empty_dict = isinstance(value, ast.Dict) and not value.keys
+            weak = isinstance(value, ast.Call) and "WeakKeyDictionary" in (
+                getattr(value.func, "attr", None),
+                getattr(value.func, "id", None),
+            )
+            if empty_dict or weak:
+                for t in targets:
+                    name = ast.unparse(t)
+                    if (rel, name) not in allowed:
+                        found.append(f"{rel}:{node.lineno} {name}")
+    assert not found, found
+
+
 def test_binary_dir_source_rows_and_glob(spark, tmp_path):
     """binaryFile source: one row per file with content bytes; the glob
     filter prunes at listing time (non-matching files never read)."""

@@ -15,7 +15,7 @@ from pinterest_data_pipeline218_spark.sources.generator import (
 )
 from pinterest_data_pipeline218_spark.streaming import pipeline as SP
 
-from conftest import rows_set
+from conftest import forget_memo, memo_entries, rows_set
 
 N = 120
 SEED = 77
@@ -4527,12 +4527,12 @@ def test_ivf_assign_raises_over_cell_cap_and_memoizes(spark):
         [(1, [0.0, 0.0, 0.0, 1.0])], "vec_id long, v array<double>"
     )
 
-    S._CELL_CAP_CACHE.clear()
+    forget_memo(spark, "cell_cap")
     with _pytest.raises(ValueError, match="IVF_CELL_CAP"):
         S.ivf_assign_cells(new, mk_cents(S.IVF_CELL_CAP + 8))
     # the over-cap verdict is memoized as cap+1 (the bounded count never
     # scans past the limit)
-    assert max(S._CELL_CAP_CACHE.values()) == S.IVF_CELL_CAP + 1
+    assert max(memo_entries(spark, "cell_cap").values()) == S.IVF_CELL_CAP + 1
 
     # at the cap exactly: assignment proceeds, ties break to the lowest
     # cell id of the query's axis (axis 3 -> label 3), and re-asserting
@@ -4543,13 +4543,14 @@ def test_ivf_assign_raises_over_cell_cap_and_memoizes(spark):
     # the memo-hit-across-rebuilds contract holds for file-rooted
     # quantizers, which every gated query has — pinned by
     # test_containment_hash_and_string_branches_agree's parquet case.)
-    S._CELL_CAP_CACHE.clear()
+    forget_memo(spark, "cell_cap")
     cents = mk_cents(S.IVF_CELL_CAP)
     got = S.ivf_assign_cells(new, cents).collect()
     assert len(got) == 1 and got[0].cell == 3
-    assert len(S._CELL_CAP_CACHE) == 1
+    assert len(memo_entries(spark, "cell_cap")) == 1
     S.ivf_assign_cells(new, cents)
-    assert len(S._CELL_CAP_CACHE) == 1  # same plan object -> memo hit
+    # same plan object -> memo hit
+    assert len(memo_entries(spark, "cell_cap")) == 1
 
 
 def test_pipeline_public_names_have_callers():
